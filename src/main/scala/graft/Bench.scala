@@ -133,40 +133,9 @@ object Bench {
         (1 until 3).map(i =>
           s"""<pool name="heavy$i"><weight>6</weight><minShare>4</minShare></pool>"""))
         .mkString("<?xml version=\"1.0\"?><allocations>", "", "</allocations>"))
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r21 (guide §2.2/§9 + VERDICT r20 #2-4): with the default
-      // parallelismFirst=true, AQE coalesces shuffle reads only down to
-      // the core count, so every KB-sized aggregate in the long tail
-      // still pays `cpus` reduce tasks — the measured 8-vs-32-core
-      // INVERSIONS (q98 0.49, q72 0.55). false makes AQE respect the
-      // advisory partition size (Spark's own production recommendation);
-      // partition counts then derive from DATA SIZE at any scale — at
-      // sf0.1 KB shuffles collapse to 1 task, on a 100 TB cluster the
-      // same conf yields thousands of 64 MB partitions. Both knobs stay
-      // env-overridable; the advisory default is Spark's own 64m, not a
-      // local tuning.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      // r21: cached plans (the suite's persisted shared views) otherwise
-      // pin their FINAL exchange at spark.sql.shuffle.partitions — every
-      // consumer of a KB-sized cached view then scans `cpus` cache
-      // partitions of dispatch overhead (the measured 8-vs-32-core
-      // inversion of the view-consuming queries: q98 0.49, q72 0.55,
-      // q95/q91 0.69). With this on, AQE coalesces the cached plan too;
-      // Spark reports the result as coalesced HASH partitioning, which
-      // still satisfies downstream clustering (no re-exchange for the
-      // doc_id-keyed consumers).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true"))
+    val spark = GraftSession.benchBuilder(cpus)
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", fairXml.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Warm up JVM/codegen and materialize the shared table cache once,

@@ -17,35 +17,15 @@ object PerfProbe {
     val explainOnly = args.length > 1 && args(1) == "explain"
     val runs = if (args.length > 1 && !explainOnly) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's AQE coalescing (r21): measurements and plan
-      // evidence must reflect the bench's own partition behavior
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      // r21: cached plans (the suite's persisted shared views) otherwise
-      // pin their FINAL exchange at spark.sql.shuffle.partitions — every
-      // consumer of a KB-sized cached view then scans `cpus` cache
-      // partitions of dispatch overhead (the measured 8-vs-32-core
-      // inversion of the view-consuming queries: q98 0.49, q72 0.55,
-      // q95/q91 0.69). With this on, AQE coalesces the cached plan too;
-      // Spark reports the result as coalesced HASH partitioning, which
-      // still satisfies downstream clustering (no re-exchange for the
-      // doc_id-keyed consumers).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.benchBuilder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     if (explainOnly) {
       val df = fn(spark, sfDir)
-      df.count() // materialize so AQE finalizes the adaptive plan
+      // run THIS Dataset's plan so AQE finalizes it (count() would run
+      // a separate derived query and leave df's plan initial), without
+      // collecting rows to the driver
+      df.queryExecution.toRdd.count()
       df.explain("formatted")
     } else (1 to runs).foreach { i =>
       val t0 = System.nanoTime()

@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   *   sbt "runMain graft.PlanSnap /root/repo/plans/r20 before q99_bigram_perplexity q100_pagerank"
   *
   * Writes <outDir>/<query>_<tag>.txt with the executed (AQE-final)
-  * formatted plan. Runs each query once (count) so AQE finalizes.
+  * formatted plan. Runs each query's own plan once so AQE finalizes.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -20,40 +20,17 @@ object PlanSnap {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's AQE coalescing (r21): measurements and plan
-      // evidence must reflect the bench's own partition behavior
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      // r21: cached plans (the suite's persisted shared views) otherwise
-      // pin their FINAL exchange at spark.sql.shuffle.partitions — every
-      // consumer of a KB-sized cached view then scans `cpus` cache
-      // partitions of dispatch overhead (the measured 8-vs-32-core
-      // inversion of the view-consuming queries: q98 0.49, q72 0.55,
-      // q95/q91 0.69). With this on, AQE coalesces the cached plan too;
-      // Spark reports the result as coalesced HASH partitioning, which
-      // still satisfies downstream clustering (no re-exchange for the
-      // doc_id-keyed consumers).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.benchBuilder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     sys.props("graft.cacheTables") = "true"
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val df = fn(spark, sfDir)
-      // collect(), not count() (r21): count() builds a SEPARATE derived
-      // query execution, so df's own AdaptiveSparkPlan never ran and the
-      // dump showed the INITIAL plan — no AQEShuffleRead / final join
-      // strategies. collect() executes THIS Dataset's plan (results are
-      // bench-output-sized), so the dump is the true AQE-final plan.
-      df.collect()
+      // not count(): it builds a SEPARATE derived query execution, so
+      // df's own AdaptiveSparkPlan never runs and the dump shows the
+      // INITIAL plan. toRdd executes THIS Dataset's plan without pulling
+      // rows to the driver, so the dump is the true AQE-final plan.
+      df.queryExecution.toRdd.count()
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver's deterministic testdata tables (TESTDATA.md).
   *
@@ -61,8 +62,8 @@ object Tables {
         s"graft.Tables: session timeZone is ${spark.conf.get("spark.sql.session.timeZone")}, " +
           "not UTC - timestamp columns read from parquet may be wall-clock shifted vs the " +
           "UTC-normalized testdata; set spark.sql.session.timeZone=UTC (GraftSession does)")
+    val raw = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") {
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -70,8 +71,20 @@ object Tables {
         case _ => // NTZ slipped through (conf read too late): identity cast under UTC
           raw.withColumn("ts", expr("cast(ts as timestamp)"))
       }
-    } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    }
+    } else raw
+  }
+
+  /** Inferred schema per (parquet path, modification time). Inference
+    * is a Spark job, which every uncached read would otherwise pay
+    * while its query is still being built; the conf guards in [[load]]
+    * run first, so the memoized types are the ones inference gives. */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[(String, Long), StructType]
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val schema = schemas.getOrElseUpdate((path, mtime), spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 }

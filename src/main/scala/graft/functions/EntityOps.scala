@@ -328,8 +328,9 @@ object EntityOps {
     // r20: localCheckpoint, not persist/unpersist — the unpersist ran
     // BEFORE the caller's action materialized anything, so the whole
     // label chain (name dim + blocked match edges) re-derived once per
-    // consumer (canonical-name arm + record join). The eager checkpoint
-    // computes it once; the label table is name-dimension-sized.
+    // consumer (canonical-name arm + record join). The lazy checkpoint
+    // computes it once, at the caller's action; the label table is
+    // name-dimension-sized.
     val labeled = entityLabels(s, d).localCheckpoint(eager = false)
     val canon = labeled.where($"nid" === $"entity_id")
       .select($"entity_id", $"name".as("canonical_name"))

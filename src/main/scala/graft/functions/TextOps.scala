@@ -1447,13 +1447,12 @@ object TextOps {
     * candidate-bounded contract as q54/q95). Each iteration is one
     * rank⋈edge join + a dst-keyed combine on that small set; the corpus
     * is touched exactly twice (N count; final left-join to emit the
-    * closed-form isolated rank). Per-iteration results are persisted and
-    * the previous unpersisted — the checkpoint discipline an unbounded
-    * iterative job needs. The edge list and the LAST iteration stay
-    * cached for the returned DataFrame's lifetime (they are in its
-    * lineage); both are duplicate-graph-sized — bounded the same way as
-    * the shared [[candidatePairs]] view, and released with the
-    * session. */
+    * closed-form isolated rank). Each iteration is a LAZY local
+    * checkpoint, which truncates the plan one iteration deep; nothing is
+    * unpersisted, so the edge list and all 5 checkpointed iterations
+    * stay cached until the returned DataFrame is garbage-collected (or
+    * the session ends). All are duplicate-graph-sized — bounded the
+    * same way as the shared [[candidatePairs]] view. */
   def q100PageRank(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dmp = PageRankDamping

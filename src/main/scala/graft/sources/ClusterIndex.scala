@@ -43,9 +43,9 @@ import org.apache.spark.sql.functions._
   * bridge doc simply stops contributing edges and its cluster SPLITS
   * into whatever the remaining edges connect.
   *
-  * Exactly-once rides [[IncrementalView.applyBatch]]'s txn-tag
-  * protocol; ClusterIndexSpec pins maintained ≡ recomputed across
-  * insert / cluster-merge / bridge-update / delete-split commits,
+  * Exactly-once rides the [[IndexLifecycle]]; ClusterIndexSpec pins
+  * maintained ≡ recomputed across insert / cluster-merge /
+  * bridge-update / delete-split commits,
   * replay rejection, and parity with q54 on the real documents table.
   */
 object ClusterIndex {
@@ -372,111 +372,55 @@ object ClusterIndex {
     * commit-order contract above must survive. Self-clearing. */
   private[graft] var injectCrashBetweenCommits: Boolean = false
 
-  /** EXACTLY-ONCE step for ONE corpus CDC micro-batch, maintaining the
-    * band index first (its own watermark) and the cluster tables after.
-    * The cluster pair's watermark rides membRoot — the table
-    * [[applyChanges]] commits LAST — so a crash between its two commits
-    * leaves the batch untagged and the replay re-enters a pass whose
-    * rewrites are idempotent (see the commit-order contract in
-    * [[applyChanges]]); ClusterIndexSpec injects exactly that crash.
-    *
-    * `scope` isolates this stream's batch-id space in the shared
-    * commit history: the band index is routinely co-maintained by
-    * [[DedupIndex.startIndexMaintenance]], whose stream has its OWN
-    * batch ids — an unscoped watermark would let one stream's high id
-    * silently swallow the other's deltas
-    * ([[ManifestTable.batchTag]]). Re-applying a band delta another
-    * scope already wrote is safe: [[DedupIndex.maintainBandIndex]] is
-    * a keyed merge, idempotent by construction. */
-  def applyBatch(changes: DataFrame, batchId: Long,
-      bandRoot: String, membRoot: String, repRoot: String,
-      scope: String = ""): Unit = {
-    val spark = changes.sparkSession
-    val ch = changes.localCheckpoint()
-    val tag = Some(ManifestTable.batchTag(scope, batchId))
-    if (batchId > ManifestTable.lastBatchTag(bandRoot, scope))
-      DedupIndex.maintainBandIndex(spark, ch, bandRoot, tag)
-    if (batchId > ManifestTable.lastBatchTag(membRoot, scope))
-      applyChanges(spark, ch, bandRoot, membRoot, repRoot, tag)
-  }
-
   /** Watermark scope of the polling path ([[DedupIndex.PollScope]]'s
     * role) — distinct from any stream's checkpoint-digest scope. */
   private[graft] val PollScope = "cluster-refresh-poll"
 
-  /** Roll band + cluster tables forward across corpus versions
-    * `(fromV, toV]`, exactly-once under the shared [[PollScope]]. */
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
+  // The band index first (its own watermark), the cluster tables after:
+  // the re-solve walks the STORED band table and must see the batch's
+  // post-state rows. The cluster pair's watermark rides membRoot — the
+  // table [[applyChanges]] commits LAST — so a crash between its two
+  // commits leaves the batch untagged and the replay re-enters a pass
+  // whose rewrites are idempotent; ClusterIndexSpec injects that crash.
+  // The band index is routinely co-maintained by
+  // [[DedupIndex.startIndexMaintenance]] under another scope; a band
+  // delta re-applied from here is a keyed merge, idempotent.
+  //
+  // Batched catch-up after a crash split (band ONE AHEAD): a doc changed
+  // A→B in the crashed commit and reverted B→A inside the range nets to
+  // nothing from the cluster watermark — right for membership, but only
+  // the band's own diff carries the B→A event that retracts the B rows
+  // its full-key-coverage merge already wrote. Hence per-table bases.
+
+  private def lifecycle(bandRoot: String, membRoot: String, repRoot: String) =
+    new IndexLifecycle("doc_id", PollScope, Seq(
+      (bandRoot, (ch, tag) => DedupIndex.maintainBandIndex(ch.sparkSession, ch, bandRoot, tag)),
+      (membRoot, (ch, tag) =>
+        applyChanges(ch.sparkSession, ch, bandRoot, membRoot, repRoot, tag))))
+
+  def applyBatch(changes: DataFrame, batchId: Long,
+      bandRoot: String, membRoot: String, repRoot: String,
+      scope: String = ""): Unit =
+    lifecycle(bandRoot, membRoot, repRoot).applyBatch(changes, batchId, scope)
+
   def refresh(spark: SparkSession, corpusRoot: String, bandRoot: String,
       membRoot: String, repRoot: String, fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("doc_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, bandRoot, membRoot, repRoot,
-        scope = PollScope)
-    }
+    lifecycle(bandRoot, membRoot, repRoot).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up across `(fromV, toV]` — one snapshot-diff read
-    * per LAGGING TABLE, one commit each
-    * ([[MaintainedIndex.refreshBatched]]'s argument, applied to the
-    * affected-cluster re-solve: the walk and the solve read the STORED
-    * band/membership tables, which are exactly the watermark state,
-    * and a doc that churned inside the range seeds once with its net
-    * pre/post pair — intermediate cluster shapes the per-version path
-    * would have solved and re-solved never materialize).
-    *
-    * Each table diffs from ITS OWN watermark
-    * ([[DedupIndex.refreshIndexesBatched]]'s rule; ADVICE r19). A
-    * crash between the band and cluster commits leaves the band ONE
-    * AHEAD, and the two diffs then genuinely differ: a doc whose
-    * content changed A→B in the crashed commit and reverted B→A inside
-    * the catch-up range nets to NOTHING from the cluster watermark —
-    * correct for membership (its clusters reflected A and the corpus
-    * holds A again) but fatal for the band table, whose full-key-
-    * coverage merge would never touch the B rows it already wrote.
-    * Only the band's own diff (base = the crashed version) carries the
-    * B→A event that retracts them. One shared read in the common
-    * aligned case; two only after a crash split the watermarks. Both
-    * commits carry the range's END version, and an empty net delta
-    * still advances the lagging watermark with a metadata-only commit
-    * so the diff base (and the corpus-retention requirement) tracks
-    * `toV`. */
   def refreshBatched(spark: SparkSession, corpusRoot: String,
       bandRoot: String, membRoot: String, repRoot: String,
-      fromV: Int, toV: Int): Unit = {
-    val (wBand, wMemb) = (ManifestTable.lastBatchTag(bandRoot, PollScope),
-      ManifestTable.lastBatchTag(membRoot, PollScope))
-    if (math.min(wBand, wMemb) >= toV.toLong) return
-    val tag = Some(ManifestTable.batchTag(PollScope, toV.toLong))
-    def diffFrom(w: Long): DataFrame = ManifestTable.readChanges(
-      spark, corpusRoot, math.max(fromV.toLong, w).toInt, toV, Seq("doc_id"),
-      preimages = true).localCheckpoint()
-    lazy val membDiff = diffFrom(wMemb)
-    // band first: the cluster re-solve walks the STORED band table and
-    // must see the range's post-state rows (applyBatch's own order)
-    if (wBand < toV.toLong)
-      DedupIndex.maintainBandIndex(spark,
-        if (wBand == wMemb) membDiff else diffFrom(wBand), bandRoot, tag)
-    if (wMemb < toV.toLong)
-      applyChanges(spark, membDiff, bandRoot, membRoot, repRoot, tag)
-    ManifestTable.advanceBatchWatermark(bandRoot, PollScope, toV.toLong)
-    ManifestTable.advanceBatchWatermark(membRoot, PollScope, toV.toLong)
-  }
+      fromV: Int, toV: Int): Unit =
+    lifecycle(bandRoot, membRoot, repRoot).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** Turnkey: keep band index + cluster tables equal to the corpus at
-    * `corpusRoot`, fed by `graft-manifest-cdc`, exactly-once. If the
-    * tables were seeded by [[bootstrap]], pass the corpus version it
-    * saw as `startingVersion` — a fresh checkpoint's first batch
-    * otherwise re-emits the whole snapshot
-    * ([[DedupIndex.bootstrapFpIndex]]'s pairing note; the cluster
-    * rewrites are idempotent, so here it costs a full re-solve rather
-    * than corruption, but the band index re-merge is still a full
-    * re-shingle of the corpus). */
+  /** If the tables were seeded by [[bootstrap]], pass the corpus version
+    * it saw as `startingVersion`: the cluster rewrites are idempotent,
+    * so a re-emitted snapshot costs a full re-solve and re-shingle
+    * rather than corruption. */
   def startMaintenance(spark: SparkSession, corpusRoot: String,
       bandRoot: String, membRoot: String, repRoot: String, checkpoint: String,
       startingVersion: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ManifestStreamSink.turnkeyMaintenance(
-      spark, corpusRoot, "doc_id", checkpoint, startingVersion) {
-      (b, id, scope) => applyBatch(b, id, bandRoot, membRoot, repRoot, scope)
-    }
+    lifecycle(bandRoot, membRoot, repRoot).startMaintenance(spark, corpusRoot,
+      checkpoint, startingVersion)
 }

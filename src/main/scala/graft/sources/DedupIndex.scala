@@ -314,117 +314,42 @@ object DedupIndex {
       ManifestTable.rewriteWhere(spark, bandRoot, "pbucket", col("live"))
   }
 
-  /** Watermark scope of the polling maintenance path: every polling
-    * caller shares it, because their batch ids live in the SAME space —
-    * corpus version numbers — so two pollers racing the same versions
-    * dedupe against each other's tags instead of double-applying. */
+  /** Watermark scope of the polling maintenance path (corpus versions
+    * as batch ids, shared by every poller). */
   private[graft] val PollScope = "refresh-poll"
 
-  /** Roll BOTH indexes forward across corpus versions `(fromV, toV]` —
-    * what a scheduled index-maintenance job runs after ingest commits
-    * land. One CDC read per version keeps each delta minimal (that
-    * commit's changed partitions only, pruned by manifest diff).
-    *
-    * EXACTLY-ONCE like the streaming path: each version rolls through
-    * [[applyBatch]] with the corpus version as the batch id under the
-    * shared [[PollScope]], so a caller that crashes between index
-    * maintenance and its own offset bookkeeping — or simply calls again
-    * with an overlapping `(fromV, toV]` — re-reads the tag and SKIPS
-    * instead of double-counting fp ref-counts. (Do NOT mix this path
-    * and [[startIndexMaintenance]] on the same index tables: the
-    * streaming scope is a different id space and the two lineages
-    * cannot see each other's watermarks.) */
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
+  // The two indexes keep INDEPENDENT watermarks: a crash between the fp
+  // and band commits replays the batch with only the band index behind.
+  // Both maintain steps compose over ranges for [[refreshIndexesBatched]]:
+  // the per-fp sign sums of a state diff telescope to the net count
+  // change, and the band merge is a keyed full-coverage merge of the
+  // post-state.
+
+  private def lifecycle(fpRoot: String, bandRoot: String) =
+    new IndexLifecycle("doc_id", PollScope, Seq(
+      (fpRoot, (ch, tag) => maintainFpIndex(ch.sparkSession, ch, fpRoot, tag)),
+      (bandRoot, (ch, tag) => maintainBandIndex(ch.sparkSession, ch, bandRoot, tag))))
+
   def refreshIndexes(spark: SparkSession, corpusRoot: String,
       fpRoot: String, bandRoot: String, fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("doc_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, fpRoot, bandRoot, scope = PollScope)
-    }
+    lifecycle(fpRoot, bandRoot).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up across `(fromV, toV]` — ONE snapshot-diff read
-    * and one commit per table instead of one per version
-    * ([[graft.sources.MaintainedIndex.refreshBatched]]'s argument,
-    * applied to the ref-count protocol): [[ManifestTable.readChanges]]
-    * is a STATE diff, so a doc that churned five times inside the
-    * range emits one pre/post pair whose per-fp sign sums telescope to
-    * exactly the net count change the per-version path accumulates,
-    * and [[maintainBandIndex]] is a keyed full-coverage merge of the
-    * post-state — both compose over ranges by construction. The TWO
-    * WATERMARKS stay independent (a crash between the fp and band
-    * commits leaves them split): each table diffs from ITS OWN
-    * watermark — diffing the fp ref-counts from below theirs would
-    * re-add already-counted docs — and both commits carry the range's
-    * END version as the tag, so per-version and batched calls
-    * interleave freely in the shared [[PollScope]].
-    * BatchedRefreshSpec pins batched ≡ per-version ≡ recomputed over a
-    * 20-commit history including a mid-catch-up stop and a SPLIT
-    * watermark (fp one commit ahead of band — the crash shape). */
   def refreshIndexesBatched(spark: SparkSession, corpusRoot: String,
-      fpRoot: String, bandRoot: String, fromV: Int, toV: Int): Unit = {
-    val tag = Some(ManifestTable.batchTag(PollScope, toV.toLong))
-    def diffFrom(w: Long): DataFrame = ManifestTable.readChanges(
-      spark, corpusRoot, math.max(fromV.toLong, w).toInt, toV, Seq("doc_id"),
-      preimages = true).localCheckpoint()
-    val (wFp, wBand) = (ManifestTable.lastBatchTag(fpRoot, PollScope),
-      ManifestTable.lastBatchTag(bandRoot, PollScope))
-    // one read when the watermarks agree (the common case); two only
-    // after a crash split them
-    lazy val shared = diffFrom(wFp)
-    if (wFp < toV.toLong)
-      maintainFpIndex(spark, shared, fpRoot, tag)
-    if (wBand < toV.toLong)
-      maintainBandIndex(spark,
-        if (wBand == wFp) shared else diffFrom(wBand), bandRoot, tag)
-    // an empty net delta commits nothing above — advance the lagging
-    // watermark(s) with a metadata-only commit so the diff base (and
-    // the corpus-retention requirement) tracks toV (ADVICE r19)
-    ManifestTable.advanceBatchWatermark(fpRoot, PollScope, toV.toLong)
-    ManifestTable.advanceBatchWatermark(bandRoot, PollScope, toV.toLong)
-  }
+      fpRoot: String, bandRoot: String, fromV: Int, toV: Int): Unit =
+    lifecycle(fpRoot, bandRoot).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** EXACTLY-ONCE streaming maintenance step — the
-    * [[IncrementalView.applyBatch]] protocol applied to BOTH index
-    * tables: each index commit carries the CDC micro-batch id as its
-    * transaction tag (inside the manifest's atomic pointer swap, riding
-    * [[ManifestTable.mergePartitioned]]'s tag), and a REPLAYED batch —
-    * delivered again after a crash anywhere between index commit and
-    * checkpoint write — reads its own id back and SKIPS. The two
-    * indexes keep INDEPENDENT watermarks: a crash between the fp commit
-    * and the band commit replays the batch with only the band index
-    * still behind, and only it re-applies. Both maintenance surfaces
-    * ride this protocol: [[startIndexMaintenance]] with the stream's
-    * checkpoint-digest scope, [[refreshIndexes]] with the shared
-    * [[PollScope]] and corpus versions as batch ids — there is no
-    * public path left that can double-count an fp ref-count
-    * (VERDICT r10 #2 / r11 missing #1).
-    *
-    * A batch whose delta nets to zero commits nothing and records no
-    * tag — harmless, because replaying a no-op is a no-op. */
   def applyBatch(changes: DataFrame, batchId: Long,
-      fpRoot: String, bandRoot: String, scope: String = ""): Unit = {
-    val spark = changes.sparkSession
-    val tag = Some(ManifestTable.batchTag(scope, batchId))
-    val ch = changes.localCheckpoint()
-    if (batchId > ManifestTable.lastBatchTag(fpRoot, scope))
-      maintainFpIndex(spark, ch, fpRoot, tag)
-    if (batchId > ManifestTable.lastBatchTag(bandRoot, scope))
-      maintainBandIndex(spark, ch, bandRoot, tag)
-  }
+      fpRoot: String, bandRoot: String, scope: String = ""): Unit =
+    lifecycle(fpRoot, bandRoot).applyBatch(changes, batchId, scope)
 
-  /** The turnkey form ([[IncrementalView.startMaintenance]]'s shape): a
-    * streaming query fed by the `graft-manifest-cdc` source (offsets in
-    * `checkpoint`) that keeps both dedup indexes equal to the corpus
-    * table at `corpusRoot`, exactly-once via [[applyBatch]]. */
+  /** The stream's scope is its own identity: another stream sharing an
+    * index root (the cluster maintenance shares the band index) has its
+    * own batch-id space and must not alias ours. */
   def startIndexMaintenance(spark: SparkSession, corpusRoot: String,
       fpRoot: String, bandRoot: String, checkpoint: String,
       startingVersion: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    // watermark scope = this stream's identity: another maintenance
-    // stream sharing an index root (the cluster maintenance shares the
-    // band index) has its own batch-id space and must not alias ours
-    ManifestStreamSink.turnkeyMaintenance(
-      spark, corpusRoot, "doc_id", checkpoint, startingVersion) {
-      (b, id, scope) => applyBatch(b, id, fpRoot, bandRoot, scope)
-    }
+    lifecycle(fpRoot, bandRoot).startMaintenance(spark, corpusRoot, checkpoint,
+      startingVersion)
 }

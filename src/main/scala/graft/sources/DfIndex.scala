@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   * stale n.
   *
   * Ref-counts are non-idempotent, so every maintenance surface rides
-  * the txn-tag protocol: [[applyBatch]] (stream), [[refresh]]
-  * (polling, corpus version = batch id under [[PollScope]]),
-  * [[startMaintenance]] (turnkey). DfIndexSpec pins maintained ≡
+  * the [[IndexLifecycle]]'s txn-tag protocol. DfIndexSpec pins maintained ≡
   * recomputed across insert/update/delete commits and replay
   * rejection; q146 oracle-gates the probe end-to-end. */
 object DfIndex {
@@ -127,62 +125,30 @@ object DfIndex {
     if (ManifestTable.currentVersion(idxRoot) >= 1)
       ManifestTable.rewriteWhere(spark, idxRoot, "bucket", col("df_docs") > 0L)
 
-  /** EXACTLY-ONCE step ([[DedupIndex.applyBatch]]'s protocol). */
-  def applyBatch(changes: DataFrame, batchId: Long, idxRoot: String,
-      scope: String = ""): Unit = {
-    if (batchId <= ManifestTable.lastBatchTag(idxRoot, scope)) return
-    // one materialization: maintainDfIndex evaluates the delta for
-    // isEmpty, the token delta, and the count delta
-    maintainDfIndex(changes.sparkSession, changes.localCheckpoint(), idxRoot,
-      Some(ManifestTable.batchTag(scope, batchId)))
-  }
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
 
-  /** Roll forward across corpus versions `(fromV, toV]`, exactly-once
-    * under the shared [[PollScope]]. */
+  private def lifecycle(idxRoot: String) = new IndexLifecycle("doc_id", PollScope,
+    Seq((idxRoot, (ch, tag) => maintainDfIndex(ch.sparkSession, ch, idxRoot, tag))))
+
+  def applyBatch(changes: DataFrame, batchId: Long, idxRoot: String,
+      scope: String = ""): Unit =
+    lifecycle(idxRoot).applyBatch(changes, batchId, scope)
+
   def refresh(spark: SparkSession, corpusRoot: String, idxRoot: String,
       fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("doc_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, idxRoot, scope = PollScope)
-    }
+    lifecycle(idxRoot).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up across `(fromV, toV]` — one snapshot-diff read,
-    * one commit ([[MaintainedIndex.refreshBatched]]'s argument, which
-    * holds for df ref-counts exactly as for fp ones: the state diff's
-    * per-(doc, token) signs telescope to the net df change, and the
-    * [[MetaToken]] corpus-size row nets the same way). Diffs from this
-    * table's own watermark; the commit carries the range's END version,
-    * so batched and per-version calls interleave in one scope. */
+  /** Batched catch-up: the state diff's per-(doc, token) signs
+    * telescope to the net df change, and the [[MetaToken]] corpus-size
+    * row nets the same way. */
   def refreshBatched(spark: SparkSession, corpusRoot: String,
-      idxRoot: String, fromV: Int, toV: Int): Unit = {
-    val w = ManifestTable.lastBatchTag(idxRoot, PollScope)
-    if (w >= toV.toLong) return
-    val ch = ManifestTable.readChanges(spark, corpusRoot,
-      math.max(fromV.toLong, w).toInt, toV, Seq("doc_id"), preimages = true)
-    applyBatch(ch, toV.toLong, idxRoot, scope = PollScope)
-    // empty net delta ⇒ no commit above; keep the diff base bounded
-    // with a metadata-only watermark advance (ADVICE r19)
-    ManifestTable.advanceBatchWatermark(idxRoot, PollScope, toV.toLong)
-  }
+      idxRoot: String, fromV: Int, toV: Int): Unit =
+    lifecycle(idxRoot).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** Turnkey stream ([[DedupIndex.startIndexMaintenance]]'s shape). */
   def startMaintenance(spark: SparkSession, corpusRoot: String,
       idxRoot: String, checkpoint: String, startingVersion: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = ManifestStreamSink.digest(
-      ManifestStreamSink.canonicalCheckpoint(checkpoint))
-    spark.readStream.format("graft-manifest-cdc")
-      .option("path", corpusRoot).option("key", "doc_id")
-      .option("startingVersion", startingVersion.toString)
-      .option("preimages", "true").load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, idxRoot, scope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    lifecycle(idxRoot).startMaintenance(spark, corpusRoot, checkpoint, startingVersion)
 
   // ------------------------------------------------------------- reads
 

@@ -444,50 +444,40 @@ object EntityIndex {
       blockers)
   }
 
-  /** Roll the entity tables forward across record-corpus versions
-    * `(fromV, toV]` — exactly-once under the shared poll scope with
-    * corpus versions as batch ids ([[StatsIndex.refresh]]'s contract). */
+  private[graft] val PollScope = "entity-refresh-poll"
+
+  // ------------------------------------- lifecycle: [[IndexLifecycle]]
+  // The entity pass is one membership-gated step ([[applyBatch]] above),
+  // not a per-table list, so it takes the lifecycle's CDC reads, version
+  // loop and stream with its own apply.
+
+  private def applier(blockRoot: String, membRoot: String, entRoot: String,
+      cap: Long, blockers: Seq[EntityOps.Blocker]): IndexLifecycle.Apply =
+    (ch, id, scope) => applyBatch(ch, id, blockRoot, membRoot, entRoot, scope, cap, blockers)
+
   def refresh(spark: SparkSession, corpusRoot: String,
       blockRoot: String, membRoot: String, entRoot: String,
       fromV: Int, toV: Int, cap: Long = EntityOps.MaxBlockSize,
       blockers: Seq[EntityOps.Blocker] = EntityOps.PartBlockers): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("p_partkey"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, blockRoot, membRoot, entRoot,
-        scope = PollScope, cap = cap, blockers = blockers)
-    }
-
-  private[graft] val PollScope = "entity-refresh-poll"
+    IndexLifecycle.refresh(spark, corpusRoot, "p_partkey", PollScope, fromV, toV)(
+      applier(blockRoot, membRoot, entRoot, cap, blockers))
 
   /** BATCHED catch-up across `(fromV, toV]` — one snapshot-diff read,
-    * one applyBatch ([[MaintainedIndex.refreshBatched]]'s argument,
-    * applied to the affected-set re-solve: the state diff's net
-    * arrivals/retractions are computed by [[applyBatch]] against the
-    * STORED membership — which is exactly the watermark state — so
-    * intermediate name churn that nets to zero never even seeds a
-    * block update).
+    * one applyBatch: the state diff's net arrivals/retractions are
+    * computed against the STORED membership, which is exactly the
+    * watermark state, so name churn that nets to zero never seeds a
+    * block update.
     *
     * A crash between the block and membership commits leaves the block
     * table AHEAD, and there a single net diff is NOT enough (ADVICE
-    * r19): the crashed commit's block retraction (a name's rows marked
-    * dead) is already stored, and if the name re-arrives inside the
-    * catch-up range — another part takes it — the net transition
-    * against the stored membership is count-only, so no arrival event
-    * would ever re-mark those rows live: the name's blocking keys stop
-    * generating candidates forever. Unlike [[ClusterIndex]]'s band
-    * table, the block rows cannot be healed by a second diff from
-    * their own watermark (they derive from TRANSITIONS against a
-    * membership state that the crash never persisted), so the split is
-    * closed the way [[applyBatch]] itself heals replays: roll
-    * PER-VERSION until the watermarks align — the crashed version
-    * replays with the block merge skipping its own tag while the
-    * membership absorbs the retraction, and the re-arrival is then a
-    * genuine arrival — and batch the remainder. Alignment costs
-    * one-version replays only after a crash; the common path stays one
-    * read + one applyBatch. An empty net delta still advances both
-    * lagging watermarks with a metadata-only commit so the diff base
-    * (and the corpus-retention requirement) tracks `toV`. */
+    * r19): the crashed commit's block retraction is already stored, and
+    * if the name re-arrives inside the range the net transition against
+    * the stored membership is count-only, so nothing would re-mark those
+    * rows live. Block rows derive from TRANSITIONS against a membership
+    * state the crash never persisted, so a second diff from their own
+    * watermark cannot heal them either. The split is closed the way
+    * [[applyBatch]] heals replays: roll PER-VERSION until the watermarks
+    * align, then batch the remainder. */
   def refreshBatched(spark: SparkSession, corpusRoot: String,
       blockRoot: String, membRoot: String, entRoot: String,
       fromV: Int, toV: Int, cap: Long = EntityOps.MaxBlockSize,
@@ -499,14 +489,11 @@ object EntityIndex {
       refresh(spark, corpusRoot, blockRoot, membRoot, entRoot,
         math.max(fromV.toLong, wMemb).toInt, math.min(wBlock, toV.toLong).toInt,
         cap, blockers)
-    val base = math.max(wMemb, math.min(wBlock, toV.toLong))
-    if (base < toV.toLong) {
-      val ch = ManifestTable.readChanges(spark, corpusRoot,
-        math.max(fromV.toLong, base).toInt, toV, Seq("p_partkey"),
-        preimages = true)
-      applyBatch(ch, toV.toLong, blockRoot, membRoot, entRoot,
-        scope = PollScope, cap = cap, blockers = blockers)
-    }
+    val base = math.max(fromV.toLong, math.max(wMemb, math.min(wBlock, toV.toLong))).toInt
+    if (base < toV)
+      applier(blockRoot, membRoot, entRoot, cap, blockers)(
+        IndexLifecycle.changes(spark, corpusRoot, "p_partkey", base, toV),
+        toV.toLong, PollScope)
     // membership FIRST: a crash between the two advances then leaves
     // the benign block-lagging direction (nothing diffs from the block
     // watermark), never a spurious block-ahead replay
@@ -514,16 +501,13 @@ object EntityIndex {
     ManifestTable.advanceBatchWatermark(blockRoot, PollScope, toV.toLong)
   }
 
-  /** Turnkey: keep the entity tables equal to the record corpus at
-    * `corpusRoot`, fed by `graft-manifest-cdc`, exactly-once. Pair a
-    * [[bootstrap]] with `startingVersion` = the bootstrapped corpus
-    * version, or the snapshot batch double-counts every n_records. */
+  /** Pair a [[bootstrap]] with `startingVersion` = the bootstrapped
+    * corpus version, or the snapshot batch double-counts every
+    * n_records. */
   def startMaintenance(spark: SparkSession, corpusRoot: String,
       blockRoot: String, membRoot: String, entRoot: String, checkpoint: String,
       startingVersion: Int = 0, cap: Long = EntityOps.MaxBlockSize)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ManifestStreamSink.turnkeyMaintenance(
-      spark, corpusRoot, "p_partkey", checkpoint, startingVersion) {
-      (b, id, scope) => applyBatch(b, id, blockRoot, membRoot, entRoot, scope, cap)
-    }
+    IndexLifecycle.stream(spark, corpusRoot, "p_partkey", checkpoint, startingVersion)(
+      applier(blockRoot, membRoot, entRoot, cap, EntityOps.PartBlockers))
 }

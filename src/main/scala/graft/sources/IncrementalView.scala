@@ -154,23 +154,16 @@ object IncrementalView {
   /** The turnkey form: a streaming query that keeps `stateRoot` equal
     * to the incremental aggregate of the [[ManifestTable]] at
     * `corpusRoot`, fed by the `graft-manifest-cdc` source (offsets in
-    * `checkpoint`) and committed exactly-once via [[applyBatch]]. */
+    * `checkpoint`) and committed exactly-once via [[applyBatch]]
+    * ([[IndexLifecycle.stream]]). */
   def startMaintenance(spark: org.apache.spark.sql.SparkSession,
       corpusRoot: String, stateRoot: String, key: Seq[String],
       groupCols: Seq[String], valueCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = ManifestStreamSink.digest(
-      ManifestStreamSink.canonicalCheckpoint(checkpoint))
-    spark.readStream.format("graft-manifest-cdc")
-      .option("path", corpusRoot).option("key", key.mkString(","))
-      .option("preimages", "true").load()
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        applyBatch(stateRoot, b, id, groupCols, valueCol, scope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IndexLifecycle.stream(spark, corpusRoot, key.mkString(","), checkpoint,
+        startingVersion = 0) {
+      (b, id, scope) => applyBatch(stateRoot, b, id, groupCols, valueCol, scope)
+    }
 
   /** Guard against the silent-drift footgun named in [[maintain]]'s
     * doc: a changes frame produced WITHOUT preimages. Used by specs. */

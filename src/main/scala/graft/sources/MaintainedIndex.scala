@@ -46,17 +46,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  4. MERGE: [[ManifestTable.mergePartitioned]] into the
   *     hash-bucketed layout — write amplification is O(touched
   *     buckets), and probes meet co-bucketed files.
-  *  5. EXACTLY-ONCE: every surface rides the txn-tag protocol
-  *     ([[DedupIndex.applyBatch]]'s contract) — [[applyBatch]]
-  *     (stream), [[refresh]] (polling, corpus versions as batch ids
-  *     under [[PollScope]]), [[startMaintenance]] (turnkey stream,
-  *     checkpoint-digest scope). A replayed batch reads its own tag
-  *     back and SKIPS.
+  *  5. EXACTLY-ONCE: [[applyBatch]], [[refresh]], [[refreshBatched]]
+  *     and [[startMaintenance]] are the [[IndexLifecycle]] over the one
+  *     index table.
   *
-  * [[DedupIndex]] stays outside deliberately: its exact index is a
-  * REF-COUNT (cross-doc netting, read-modify-write against the stored
-  * count) and its band index uses full-key-coverage tombstones — two
-  * genuinely different protocols, not copies of this one. */
+  * [[DedupIndex]] stays outside the fact protocol deliberately: its
+  * exact index is a REF-COUNT (cross-doc netting, read-modify-write
+  * against the stored count) and its band index uses full-key-coverage
+  * tombstones — two genuinely different maintain steps, sharing only
+  * the lifecycle. */
 private[graft] trait MaintainedIndex {
 
   /** Stable hash-bucket count for the index table's partition layout
@@ -158,96 +156,27 @@ private[graft] trait MaintainedIndex {
       idxRoot, "bucket" +: mergeKeyCols, "bucket", tag = tag)
   }
 
-  /** EXACTLY-ONCE step ([[DedupIndex.applyBatch]]'s txn-tag
-    * protocol): a replayed batch reads its own tag back and skips. */
-  final def applyBatch(changes: DataFrame, batchId: Long, idxRoot: String,
-      scope: String = ""): Unit = {
-    if (batchId <= ManifestTable.lastBatchTag(idxRoot, scope)) return
-    maintainIndex(changes.localCheckpoint(), idxRoot,
-      Some(ManifestTable.batchTag(scope, batchId)))
-  }
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
 
-  /** Roll forward across corpus versions `(fromV, toV]`, exactly-once
-    * under the shared [[PollScope]]: one CDC read and one index commit
-    * PER VERSION — the latency-proportional shape a polling maintainer
-    * wants (each version lands as soon as its delta is read). An index
-    * waking up hundreds of versions behind should use
-    * [[refreshBatched]] instead. */
+  private def lifecycle(idxRoot: String) = new IndexLifecycle("doc_id", PollScope,
+    Seq((idxRoot, (ch, tag) => maintainIndex(ch, idxRoot, tag))))
+
+  final def applyBatch(changes: DataFrame, batchId: Long, idxRoot: String,
+      scope: String = ""): Unit =
+    lifecycle(idxRoot).applyBatch(changes, batchId, scope)
+
   final def refresh(spark: SparkSession, corpusRoot: String, idxRoot: String,
       fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("doc_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, idxRoot, scope = PollScope)
-    }
+    lifecycle(idxRoot).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up (VERDICT r18 #6): roll forward across
-    * `(fromV, toV]` with ONE CDC read and ONE merge commit, not one
-    * per version — the shape for an index waking up hundreds of
-    * versions behind, where [[refresh]] pays toV−fromV sequential
-    * Spark jobs and index commits.
-    *
-    * Correct-by-construction under the SAME [[PollScope]] watermark as
-    * [[refresh]], because both of this table format's primitives
-    * already compose over ranges:
-    *
-    *  - [[ManifestTable.readChanges]] is a SNAPSHOT DIFF, so the range
-    *    read nets intermediate churn by itself (a doc updated five
-    *    times inside the range emits ONE pre/post pair — the batched
-    *    read is O(net changed docs), cheaper than the sum of deltas);
-    *  - the merge commit is ATOMIC, so a crash mid-catch-up commits
-    *    nothing and moves no watermark: the retry re-diffs the same
-    *    range. There is no partially-applied state to disambiguate —
-    *    the ambiguity that would force a per-version fallback cannot
-    *    arise.
-    *
-    * The one subtlety is the DIFF BASE: the preimage side must be the
-    * state the index currently reflects, which is the watermark
-    * version — NOT the caller's `fromV`. Diffing from below the
-    * watermark would re-remove facts of a state already superseded and
-    * leave the watermark state's own facts live (a doc updated A→B
-    * before the watermark and B→C after would keep B's facts forever).
-    * So the read starts at `max(fromV, watermark)`, which also makes a
-    * replay (`watermark ≥ toV`) a no-op read of nothing. The commit
-    * carries the range's END version as its tag, so per-version and
-    * batched refreshes interleave freely in one scope.
-    * BatchedRefreshSpec pins batched ≡ per-version ≡ recomputed over a
-    * 20-commit history including a mid-catch-up stop and a replay.
-    * Requires `max(fromV, watermark)`'s manifest to still be retained
-    * (readChanges refuses a vacuumed diff base loudly) — a requirement
-    * this call itself keeps BOUNDED (ADVICE r19): a range whose delta
-    * nets to zero rows has nothing to merge and so records no tag, so
-    * without the closing [[ManifestTable.advanceBatchWatermark]] a
-    * long-idle index would re-diff from the same stale base forever
-    * and fail loudly once the corpus is vacuumed past it, even though
-    * its rows are fully current. The metadata-only advance moves the
-    * diff base to `toV` whenever the maintain step had nothing to
-    * commit, so retention only ever needs to cover the gap since the
-    * LAST catch-up call, not the last time the corpus changed. */
   final def refreshBatched(spark: SparkSession, corpusRoot: String,
-      idxRoot: String, fromV: Int, toV: Int): Unit = {
-    val w = ManifestTable.lastBatchTag(idxRoot, PollScope)
-    if (w >= toV.toLong) return
-    val effFrom = math.max(fromV.toLong, w).toInt
-    val ch = ManifestTable.readChanges(
-      spark, corpusRoot, effFrom, toV, Seq("doc_id"), preimages = true)
-    maintainIndex(ch.localCheckpoint(), idxRoot,
-      Some(ManifestTable.batchTag(PollScope, toV.toLong)))
-    ManifestTable.advanceBatchWatermark(idxRoot, PollScope, toV.toLong)
-  }
+      idxRoot: String, fromV: Int, toV: Int): Unit =
+    lifecycle(idxRoot).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** Turnkey stream ([[DedupIndex.startIndexMaintenance]]'s shape):
-    * keep the index equal to the document corpus at `corpusRoot`, fed
-    * by `graft-manifest-cdc`, exactly-once under the checkpoint-digest
-    * scope. Pair a bootstrap with `startingVersion`, or the re-emitted
-    * snapshot batch double-applies. */
   final def startMaintenance(spark: SparkSession, corpusRoot: String,
       idxRoot: String, checkpoint: String, startingVersion: Int = 0)
       : StreamingQuery =
-    ManifestStreamSink.turnkeyMaintenance(
-      spark, corpusRoot, "doc_id", checkpoint, startingVersion) {
-      (b, id, scope) => applyBatch(b, id, idxRoot, scope)
-    }
+    lifecycle(idxRoot).startMaintenance(spark, corpusRoot, checkpoint, startingVersion)
 
   /** Live fact rows — tombstones filtered, bucket dropped. */
   protected final def readLiveRows(spark: SparkSession, idxRoot: String): DataFrame =

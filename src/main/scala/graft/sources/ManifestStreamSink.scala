@@ -104,35 +104,4 @@ object ManifestStreamSink {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
-
-  /** THE turnkey maintenance shell every index family shares (the
-    * round-18 consolidation's streaming face): a `graft-manifest-cdc`
-    * read of `corpusRoot` (preimages on, offsets in `checkpoint`)
-    * driving `apply(batch, batchId, scope)` per micro-batch, where
-    * scope = the checkpoint's digest — this stream's identity in the
-    * txn-tag space, so two streams sharing an index table cannot alias
-    * each other's replay watermarks. `apply` is each family's
-    * exactly-once applyBatch (single-table for [[MaintainedIndex]]
-    * fronts, multi-table for [[DedupIndex]]/[[ClusterIndex]]/
-    * [[EntityIndex]]). Pair a snapshot bootstrap with
-    * `startingVersion`, or the re-emitted snapshot batch
-    * double-applies (the non-idempotent ref-counts corrupt; the
-    * idempotent merges pay a full recompute). */
-  private[graft] def turnkeyMaintenance(
-      spark: org.apache.spark.sql.SparkSession, corpusRoot: String,
-      key: String, checkpoint: String, startingVersion: Int)(
-      apply: (org.apache.spark.sql.DataFrame, Long, String) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = digest(canonicalCheckpoint(checkpoint))
-    spark.readStream.format("graft-manifest-cdc")
-      .option("path", corpusRoot).option("key", key)
-      .option("startingVersion", startingVersion.toString)
-      .option("preimages", "true").load()
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        apply(b, id, scope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * update that keeps a band's value but changes the fingerprint nets
   * the OLD (hi, lo) out and the new in; the live row wins the
   * (bk, media_id) merge key. Exactly-once rides
-  * [[DedupIndex.applyBatch]]'s txn-tag protocol. ModalityIndexSpec
+  * [[IndexLifecycle]]'s txn-tag protocol. ModalityIndexSpec
   * pins maintained ≡ recomputed across insert/update/delete commits
   * and replay rejection; q178/q179 oracle-gate the reads against an
   * engine that never saw the index. */

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * and are not rewritten; a dropped window nets −1 and tombstones
   * (`alive = false`, readers filter). Non-idempotent only at the
   * commit level, so every maintenance surface rides the txn-tag
-  * protocol ([[DedupIndex.applyBatch]]'s contract): [[applyBatch]]
-  * (stream), [[refresh]] (polling), [[startMaintenance]] (turnkey).
+  * protocol of [[IndexLifecycle]]: [[applyBatch]] (stream),
+  * [[refresh]] (polling), [[startMaintenance]] (turnkey).
   * SpanIndexSpec pins maintained ≡ recomputed across
   * insert/update/delete commits and replay rejection; q171/q172
   * oracle-gate the reports end-to-end against an engine that never saw

@@ -30,10 +30,7 @@ import org.apache.spark.sql.functions._
   * metadata-sized): (-1, -1) → n; (i, -2) → frozen center μ0ᵢ;
   * (i, -1) → Σ(vᵢ−μ0ᵢ); (i, j ≥ i) → Σ(vᵢ−μ0ᵢ)(vⱼ−μ0ⱼ).
   *
-  * Exactly-once exactly as [[DedupIndex]]: [[applyBatch]] carries the
-  * CDC batch id as the manifest commit's txn tag, [[refresh]] rides the
-  * same protocol under the shared [[PollScope]] with corpus versions as
-  * ids, [[startMaintenance]] is the turnkey stream. */
+  * Exactly-once through the [[IndexLifecycle]], like every index. */
 object StatsIndex {
 
   private[graft] val PollScope = "stats-refresh-poll"
@@ -144,72 +141,36 @@ object StatsIndex {
       root, Seq("part", "i", "j"), "part", tag = tag)
   }
 
-  /** EXACTLY-ONCE step ([[DedupIndex.applyBatch]]'s protocol): the CDC
-    * batch id rides the stats commit as its txn tag; replays skip.
-    * Additive sums are genuinely non-idempotent — without the tag a
-    * replayed delta double-counts, exactly like fp ref-counts. */
-  def applyBatch(changes: DataFrame, batchId: Long, root: String,
-      scope: String = ""): Unit = {
-    if (batchId <= ManifestTable.lastBatchTag(root, scope)) return
-    // one materialization: maintain evaluates the delta for isEmpty and
-    // the moment aggregation
-    maintain(changes.sparkSession, changes.localCheckpoint(), root,
-      Some(ManifestTable.batchTag(scope, batchId)))
-  }
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
+  // Additive sums are non-idempotent: without the txn tag a replayed
+  // delta double-counts, exactly like fp ref-counts.
 
-  /** Roll the stats forward across corpus versions `(fromV, toV]` —
-    * exactly-once under the shared [[PollScope]] with corpus versions
-    * as batch ids ([[DedupIndex.refreshIndexes]]'s contract: replayed
-    * or overlapping ranges skip; do not mix with a
-    * [[startMaintenance]] stream on the same root). */
+  private def lifecycle(root: String) = new IndexLifecycle("vec_id", PollScope,
+    Seq((root, (ch, tag) => maintain(ch.sparkSession, ch, root, tag))))
+
+  def applyBatch(changes: DataFrame, batchId: Long, root: String,
+      scope: String = ""): Unit =
+    lifecycle(root).applyBatch(changes, batchId, scope)
+
   def refresh(spark: SparkSession, corpusRoot: String, root: String,
       fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("vec_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, root, scope = PollScope)
-    }
+    lifecycle(root).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up across `(fromV, toV]` — one snapshot-diff read,
-    * one 2,209-row merge ([[MaintainedIndex.refreshBatched]]'s
-    * argument; the signed centered moments are additive per row, so a
-    * range diff's contributions telescope to the per-version sum —
-    * and a vector that churned N times inside the range contributes
-    * ONE retraction + ONE addition instead of N, which also sheds
-    * N−1 of the float-residue steps the rebootstrap note above
-    * budgets against). Diffs from this table's own watermark. */
+  /** Batched catch-up: the signed centered moments are additive per
+    * row, so a range diff telescopes to the per-version sum — and a
+    * vector that churned N times inside the range contributes ONE
+    * retraction + ONE addition instead of N, which also sheds N−1 of
+    * the float-residue steps [[rebootstrap]] budgets against. */
   def refreshBatched(spark: SparkSession, corpusRoot: String, root: String,
-      fromV: Int, toV: Int): Unit = {
-    val w = ManifestTable.lastBatchTag(root, PollScope)
-    if (w >= toV.toLong) return
-    val ch = ManifestTable.readChanges(spark, corpusRoot,
-      math.max(fromV.toLong, w).toInt, toV, Seq("vec_id"), preimages = true)
-    applyBatch(ch, toV.toLong, root, scope = PollScope)
-    // empty net delta ⇒ no commit above; keep the diff base bounded
-    // with a metadata-only watermark advance (ADVICE r19)
-    ManifestTable.advanceBatchWatermark(root, PollScope, toV.toLong)
-  }
+      fromV: Int, toV: Int): Unit =
+    lifecycle(root).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** Turnkey: keep the stats equal to the embedding corpus at
-    * `corpusRoot`, exactly-once via [[applyBatch]]. Pair a
-    * [[bootstrap]] with `startingVersion` = the bootstrapped corpus
-    * version, or the snapshot batch double-counts. */
+  /** Pair a [[bootstrap]] with `startingVersion` = the bootstrapped
+    * corpus version, or the snapshot batch double-counts. */
   def startMaintenance(spark: SparkSession, corpusRoot: String,
       root: String, checkpoint: String, startingVersion: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = ManifestStreamSink.digest(
-      ManifestStreamSink.canonicalCheckpoint(checkpoint))
-    spark.readStream.format("graft-manifest-cdc")
-      .option("path", corpusRoot).option("key", "vec_id")
-      .option("startingVersion", startingVersion.toString)
-      .option("preimages", "true").load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, root, scope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    lifecycle(root).startMaintenance(spark, corpusRoot, checkpoint, startingVersion)
 
   // ------------------------------------------------------------- reads
 

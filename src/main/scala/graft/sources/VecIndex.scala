@@ -95,81 +95,39 @@ object VecIndex {
       idxRoot, indexKey, "pbucket", tag = tag)
   }
 
-  /** Watermark scope of the polling path — shared by every poller, ids
-    * are corpus versions ([[DedupIndex.PollScope]]'s reasoning). */
   private[graft] val PollScope = "vec-refresh-poll"
 
-  /** Roll the index forward across corpus versions `(fromV, toV]` —
-    * through [[applyBatch]]'s txn tags under [[PollScope]], so replayed
-    * or overlapping ranges skip. `maintain`'s keyed upserts are
-    * idempotent (unlike fp ref-counts), so this is uniformity + a
-    * cheaper skip, not a correctness fix. */
+  // ------------------------------------- exactly-once: [[IndexLifecycle]]
+  // `maintain`'s keyed upserts are idempotent, so the txn tags are a
+  // cheaper skip and protocol uniformity here, not a correctness fix.
+  // The quantizer stays FROZEN: only the cell index advances.
+
+  private def lifecycle(centRoot: String, idxRoot: String) =
+    new IndexLifecycle("vec_id", PollScope,
+      Seq((idxRoot, (ch, tag) => maintain(ch.sparkSession, ch, centRoot, idxRoot, tag))))
+
+  def applyBatch(changes: DataFrame, batchId: Long,
+      centRoot: String, idxRoot: String, scope: String = ""): Unit =
+    lifecycle(centRoot, idxRoot).applyBatch(changes, batchId, scope)
+
   def refresh(spark: SparkSession, corpusRoot: String,
       centRoot: String, idxRoot: String, fromV: Int, toV: Int): Unit =
-    (fromV until toV).foreach { v =>
-      val ch = ManifestTable.readChanges(
-        spark, corpusRoot, v, v + 1, Seq("vec_id"), preimages = true)
-      applyBatch(ch, (v + 1).toLong, centRoot, idxRoot, scope = PollScope)
-    }
+    lifecycle(centRoot, idxRoot).refresh(spark, corpusRoot, fromV, toV)
 
-  /** BATCHED catch-up across `(fromV, toV]` — one snapshot-diff read,
-    * one cell-index commit ([[MaintainedIndex.refreshBatched]]'s
-    * argument; the frozen centroids make each vector's cell a pure
-    * function of its payload, so the keyed upsert/tombstone merge of
-    * the range's post-state composes — a vector that moved cells five
-    * times inside the range lands one tombstone + one live row).
-    * Diffs from the cell index's own watermark. */
+  /** Batched catch-up: the frozen centroids make each vector's cell a
+    * pure function of its payload, so the keyed upsert/tombstone merge
+    * of the range's post-state composes — a vector that moved cells
+    * five times inside the range lands one tombstone + one live row. */
   def refreshBatched(spark: SparkSession, corpusRoot: String,
-      centRoot: String, idxRoot: String, fromV: Int, toV: Int): Unit = {
-    val w = ManifestTable.lastBatchTag(idxRoot, PollScope)
-    if (w >= toV.toLong) return
-    val ch = ManifestTable.readChanges(spark, corpusRoot,
-      math.max(fromV.toLong, w).toInt, toV, Seq("vec_id"), preimages = true)
-    applyBatch(ch, toV.toLong, centRoot, idxRoot, scope = PollScope)
-    // empty net delta ⇒ no commit above; keep the diff base bounded
-    // with a metadata-only watermark advance (ADVICE r19)
-    ManifestTable.advanceBatchWatermark(idxRoot, PollScope, toV.toLong)
-  }
+      centRoot: String, idxRoot: String, fromV: Int, toV: Int): Unit =
+    lifecycle(centRoot, idxRoot).refreshBatched(spark, corpusRoot, fromV, toV)
 
-  /** EXACTLY-ONCE streaming maintenance step — the
-    * [[IncrementalView.applyBatch]] protocol for the cell index: the
-    * CDC micro-batch id rides the index commit as its transaction tag,
-    * so a replayed batch (crash between index commit and checkpoint
-    * write) reads its own id back and skips instead of re-applying
-    * (VERDICT r10 #2 — `maintain`'s tombstone writes are idempotent,
-    * but skipping is still cheaper and keeps the protocol uniform with
-    * [[DedupIndex.applyBatch]]'s genuinely non-idempotent ref-counts). */
-  def applyBatch(changes: DataFrame, batchId: Long,
-      centRoot: String, idxRoot: String, scope: String = ""): Unit = {
-    if (batchId <= ManifestTable.lastBatchTag(idxRoot, scope)) return
-    // one materialization: maintain evaluates the delta for isEmpty,
-    // the assignment, and the key set — without this, each is a full
-    // re-read of the CDC delta (manifest diff + preimage reconstruction)
-    maintain(changes.sparkSession, changes.localCheckpoint(), centRoot, idxRoot,
-      Some(ManifestTable.batchTag(scope, batchId)))
-  }
-
-  /** Turnkey: keep the cell index equal to the embedding corpus at
-    * `corpusRoot`, fed by `graft-manifest-cdc` (offsets in
-    * `checkpoint`), exactly-once via [[applyBatch]]. The quantizer
-    * stays FROZEN — only the cell index advances. */
   def startMaintenance(spark: SparkSession, corpusRoot: String,
       centRoot: String, idxRoot: String, checkpoint: String,
       startingVersion: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = ManifestStreamSink.digest(
-      ManifestStreamSink.canonicalCheckpoint(checkpoint))
-    spark.readStream.format("graft-manifest-cdc")
-      .option("path", corpusRoot).option("key", "vec_id")
-      .option("startingVersion", startingVersion.toString)
-      .option("preimages", "true").load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, centRoot, idxRoot, scope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    lifecycle(centRoot, idxRoot).startMaintenance(spark, corpusRoot, checkpoint,
+      startingVersion)
 
   /** Age `live = false` tombstones out of the cell index
     * ([[DedupIndex.purgeTombstones]]'s reasoning). */
