@@ -9,8 +9,8 @@ import java.time.{Clock, LocalDate, ZoneId}
   * Every "current date" in the engine flows through a
   * `java.time.Clock`, so production uses the system clock while tests
   * and reruns pin a fixed instant — a replayed job must compute the
-  * same ranges it computed the first time. Verify/Bench pin UTC via
-  * session config for oracle determinism; this is the parameterized
+  * same ranges it computed the first time. Every graft session pins UTC
+  * (`GraftSession.defaults`) for oracle determinism; this is the parameterized
   * path for the reference's reporting semantics.
   */
 object Clocks {

@@ -26,8 +26,8 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  /** The AQE partition profile Bench times under; each knob stays
-    * overridable from the environment.
+  /** The AQE partition profile every graft main runs under (perfbench's
+    * harness sets the same three values itself):
     *   - `parallelismFirst=false`: with the default `true`, AQE coalesces
     *     shuffle reads only down to the core count, so every KB-sized
     *     aggregate still pays `cpus` reduce tasks (the measured
@@ -46,12 +46,9 @@ object GraftSession {
     *     downstream clustering.
     */
   private val benchProfile: Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"),
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true"))
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   /** Builder preloaded with the graft defaults; call sites chain their
     * own master/shuffle/extension config on top. */
@@ -61,11 +58,12 @@ object GraftSession {
     b
   }
 
-  /** The session Bench and the plan tools measure: `local[cpus]`, one
-    * shuffle partition per core, and [[benchProfile]] — so timings and
-    * plan evidence reflect the bench's own partition behaviour. */
-  def benchBuilder(cpus: String): SparkSession.Builder = {
-    val b = builder().master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
+  /** The session every graft main builds — Verify, Probe, ScaleProbe,
+    * PipelineDemo: `local[cpus]`, one shuffle partition per core, and
+    * [[benchProfile]] — so the oracle checks, and the probes time and
+    * plan, the configuration the benchmark measures. */
+  def benchBuilder(cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder = {
+    val b = builder().master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus.toString)
     benchProfile.foreach { case (k, v) => b.config(k, v) }
     b
   }

@@ -9,12 +9,7 @@ import graft.sources.Ingest
   * `sbt "runMain graft.PipelineDemo"`. */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val work = java.nio.file.Files.createTempDirectory("graft_demo").toString

@@ -17,7 +17,7 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Opt-in table cache for suite runs (Bench sets
+  /** Opt-in table cache for suite runs (perfbench sets
     * -Dgraft.cacheTables=true): returns one shared persisted DataFrame
     * per (sfDir, table) so all queries hit the same InMemoryRelation —
     * the engine-side analog of the reference's st.cache_data gold cache

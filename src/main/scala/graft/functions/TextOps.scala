@@ -2599,10 +2599,10 @@ object TextOps {
       |WHERE a.doc_id % 10 = 9 AND b.doc_id % 10 <> 9""".stripMargin
 
   /** Every suite-shared persisted view, by name, with a thunk forcing
-    * its materialization — Bench times these as named `view:<name>`
-    * entries BEFORE the per-query passes, so a query's sequential number
+    * its materialization — perfbench builds these in its set-up, each as
+    * its own `views` span, BEFORE the timed passes, so a query's time
     * stops silently absorbing a view (re)build when memory pressure
-    * evicts one mid-suite (VERDICT r9: q58/q87/q30-class numbers tripled
+    * evicts one mid-run (VERDICT r9: q58/q87/q30-class numbers tripled
     * on eviction noise). Listed in dependency order (capped/distinct/
     * candidate views all derive from raw_shingles; components from
     * candidates), so each thunk's time is its OWN build, not a hidden

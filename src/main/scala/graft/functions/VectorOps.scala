@@ -52,7 +52,7 @@ object VectorOps {
       .drop("embedding")
   }
 
-  /** The module's suite-shared views for Bench's attributed warmup
+  /** The module's suite-shared views for perfbench's timed set-up
     * (same contract as TextOps.sharedViewBuilders). */
   private[graft] def sharedViewBuilders(
       s: SparkSession, d: String): Seq[(String, () => Long)] = Seq(

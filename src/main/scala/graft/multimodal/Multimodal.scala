@@ -3098,8 +3098,9 @@ object Multimodal {
   /** q195's pair set as an opt-in shared persisted view (same
     * `graft.cacheTables` flag and lifecycle as TextOps' candidate
     * cache): q196 consumes the full set twice, so suite runs pay the
-    * decode + band-join once, as a named `view:crossmodal_pairs`
-    * entry. Off by default — Verify measures the real path. */
+    * decode + band-join once, as the shared view `crossmodal_pairs`.
+    * Entries of stopped sessions are dropped on access; their blocks
+    * went with `SparkContext.stop`. Off by default — Verify measures the real path. */
   private val crossmodalPairsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 

@@ -161,9 +161,9 @@ object TopK {
       rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession
     // synchronized: extraStrategies is a read-modify-write on shared
-    // session state — two queries registering concurrently (the bench's
-    // throughput pass) could otherwise lose the update and leave a
-    // TopKPerGroup node with no matching strategy
+    // session state — two queries registering concurrently (any
+    // multi-threaded client of one session) could otherwise lose the
+    // update and leave a TopKPerGroup node with no matching strategy
     TopKPerGroupStrategy.synchronized {
       if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
         spark.experimental.extraStrategies =

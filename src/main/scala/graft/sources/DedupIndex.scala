@@ -155,7 +155,8 @@ object DedupIndex {
   def probeExact(batch: DataFrame, spark: SparkSession, idxRoot: String): DataFrame = {
     // fps is NOT checkpointed: the md5 scan is cheap to recompute, and
     // a probe is a read-path query — pinning storage blocks per call
-    // would evict longer-lived shared caches (measured in Bench)
+    // would evict longer-lived shared caches (measured with the whole
+    // suite's tables and views cached)
     val fps = TextOps.fingerprintsOf(batch)
     val touched = ManifestTable
       .readKeyPruned(spark, idxRoot, "fp", IndexBuckets, fps)

@@ -83,5 +83,17 @@ class IndexLifecycleSpec extends SparkSpec {
   test("the AQE session profile lives only in GraftSession") {
     val outside = mainSources.filterNot(_.getFileName.toString == "GraftSession.scala")
     assert(containing(outside, "\"spark.sql.adaptive.").isEmpty)
+    // every session is built there too, and only the four mains build one
+    assert(containing(outside, "SparkSession.builder").isEmpty)
+    assert(containing(outside, ".master(").isEmpty)
+    val mains = containing(mainSources, "def main(").map(f =>
+      """(?m)^object (\w+)""".r.findFirstMatchIn(Files.readString(Paths.get(f))).get.group(1))
+    assert(mains.sorted == Seq("PipelineDemo", "Probe", "ScaleProbe", "Verify"), mains)
+  }
+
+  test("the retired benchmark and profile env knobs are read nowhere") {
+    val knobs = Seq("BENCH_POOL", "SHUFFLE_CONC", "BENCH_ATTEMPTS", "CAL_IO_BASIS",
+      "BENCH_OUT", "PARALLELISM_FIRST", "ADVISORY_PART", "AQE_CACHED")
+    knobs.foreach(k => assert(containing(mainSources, "SPARK_GRAFT_" + k).isEmpty, k))
   }
 }

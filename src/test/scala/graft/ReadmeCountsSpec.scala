@@ -53,14 +53,14 @@ class ReadmeCountsSpec extends org.scalatest.funsuite.AnyFunSuite {
         s"${SparkEntry.sparkSql.size} twins")
   }
 
-  test("README's bench suite-size claim matches the queries map (the bench " +
-    "times EVERY query, oracle-gated or not — VERDICT r12 #4 conflated the " +
-    "149 oracle-text count with the timed-suite size)") {
-    val c = """suite wall measured [\d.]+ s with (\d+) queries timed\s+\((\d+) oracle-gated""".r
+  test("README's Verify suite-size claim matches the queries map (Verify " +
+    "dumps EVERY query, oracle-gated or not — VERDICT r12 #4 conflated the " +
+    "149 oracle-text count with the suite size)") {
+    val c = """correctness dump of (\d+) queries\s+\((\d+) oracle-gated""".r
       .findFirstMatchIn(readme).map(m => (m.group(1).toInt, m.group(2).toInt))
-    assert(c.isDefined, "README no longer states the timed-suite size")
+    assert(c.isDefined, "README no longer states the Verify suite size")
     assert(c.get._1 == SparkEntry.queries.size,
-      s"README says ${c.get._1} queries timed; map has ${SparkEntry.queries.size}")
+      s"README says ${c.get._1} queries dumped; map has ${SparkEntry.queries.size}")
     assert(c.get._2 == SparkEntry.oracleSql.size,
       s"README says ${c.get._2} oracle-gated; map has ${SparkEntry.oracleSql.size}")
   }
