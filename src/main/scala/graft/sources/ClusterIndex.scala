@@ -66,6 +66,25 @@ object ClusterIndex {
   private def withRBucket(df: DataFrame): DataFrame =
     df.withColumn("rbucket", ManifestTable.bucketIdColumn(col("rep"), IndexBuckets))
 
+  /** `df` locally checkpointed, with its row count, from ONE job: the
+    * count runs over the checkpoint's own RDD (no aggregate exchange,
+    * which under AQE is a job of its own) and fills the lazy checkpoint
+    * as it goes. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val c = df.localCheckpoint(eager = false)
+    (c, c.queryExecution.toRdd.count())
+  }
+
+  /** Band-collision edges (doc_a < doc_b) among `bands`' docs,
+    * materialized once with their count — the count picks the solver
+    * ([[TextOps.LocalComponentsMaxEdges]]), the rows feed it. */
+  private def edgesOf(bands: DataFrame): (DataFrame, Long) =
+    checkpointCounted(bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct())
+
   // ------------------------------------------------------------ compute
 
   /** Ground-truth membership of a corpus snapshot: (doc_id, rep,
@@ -75,14 +94,11 @@ object ClusterIndex {
     * corpus. Edge definition shared with q30/q126 through
     * [[TextOps.bandRowsOf]]. */
   def computeMembership(docs: DataFrame): DataFrame = {
-    val bands = TextOps.bandRowsOf(docs)
-    val edges = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val (edges, nEdges) = edgesOf(TextOps.bandRowsOf(docs))
+    // local labels are materialized (the iterative solver's already
+    // are): the returned frame may be evaluated by several consumers
     val labels =
-      if (edges.count() <= TextOps.LocalComponentsMaxEdges)
+      if (nEdges <= TextOps.LocalComponentsMaxEdges)
         TextOps.componentLabelsLocal(edges).localCheckpoint()
       else TextOps.componentLabelsIterative(edges)
     docs.select(col("doc_id"),
@@ -205,11 +221,17 @@ object ClusterIndex {
   def applyChanges(spark: SparkSession, changes: DataFrame,
       bandRoot: String, membRoot: String, repRoot: String,
       tag: Option[String] = None): Unit = {
-    if (changes.isEmpty) return
-    val ch = changes.select(col("doc_id"), col("_change_type")).localCheckpoint()
-    val changedIds = ch.select(col("doc_id")).distinct().localCheckpoint()
-    val deleted = ch.where(col("_change_type") === "delete")
-      .select(col("doc_id")).distinct().localCheckpoint()
+    // Each intermediate is materialized ONCE: a frame read by several
+    // steps is a lazy checkpoint that its first consumer's job fills, a
+    // guard counts in the job that fills its frame, and a frame with one
+    // consumer is not checkpointed at all.
+    // 0. one (doc_id, is_deleted) row per changed doc; its count is the
+    // empty-batch exit
+    val (ids, nChanged) = checkpointCounted(changes.groupBy(col("doc_id"))
+      .agg(max(col("_change_type") === "delete").as("is_deleted")))
+    if (nChanged == 0) return
+    val changedIds = ids.select(col("doc_id"))
+    val deleted = ids.where(col("is_deleted")).select(col("doc_id"))
 
     // 1. corpus docs band-colliding with the changed docs' NEW images:
     // batch-side band rows come from the (already maintained) index —
@@ -217,13 +239,13 @@ object ClusterIndex {
     // unhinted equi join, [[DedupIndex.probeNearDup]]'s reasoning: the
     // batch side is small at production ratios (AQE broadcasts it), but
     // a bootstrap-sized first batch must not be force-broadcast
-    val chBands = bandRowsFromIndex(spark, bandRoot, changedIds).localCheckpoint()
+    val chBands = bandRowsFromIndex(spark, bandRoot, changedIds)
     val collided = DedupIndex.readBandIndex(spark, bandRoot).as("b")
       .join(chBands.as("a"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(col("b.doc_id")).distinct()
-    val seeds = changedIds.union(collided).distinct().localCheckpoint()
+    val seeds = changedIds.union(collided).distinct().localCheckpoint(eager = false)
 
     // 2. affected reps and their member lists → M. Dead (rep → doc)
     // rows are followed too, but GUARDEDLY: on a crash-replay the rep
@@ -242,16 +264,17 @@ object ClusterIndex {
     // tombstone (membership points at the doc's new, unaffected
     // cluster). Pinned by ClusterIndexSpec's successive-batches test.
     val seedReps = membOf(spark, membRoot, seeds)
-      .select(col("rep")).distinct().localCheckpoint()
+      .select(col("rep")).distinct().localCheckpoint(eager = false)
     val reached = membersOf(spark, repRoot, seedReps, includeDead = true)
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val liveMembers = reached.where(col("live")).select(col("doc_id"))
     val deadOnly = reached.where(!col("live")).select(col("doc_id")).distinct()
       .join(liveMembers, Seq("doc_id"), "left_anti")
     val deadKept = membOf(spark, membRoot, deadOnly)
       .join(broadcast(seedReps), Seq("rep"), "left_semi")
       .select(col("doc_id"))
-    val m = liveMembers.union(deadKept).union(seeds).distinct().localCheckpoint()
+    val (m, walkCount) =
+      checkpointCounted(liveMembers.union(deadKept).union(seeds).distinct())
     // FAIL-FAST guard before the heavy pruned-read/broadcast work below:
     // the walk-reached set is an upper bound on the re-solved set (it
     // still carries this batch's deletes and long-dead docs), so it is
@@ -260,7 +283,6 @@ object ClusterIndex {
     // purgeTombstones/bootstrap is overdue; either way, stop before a
     // multi-million-row broadcast replaces this message with an OOM.
     // The EXACT cap on the solver's input is below, on mLive.
-    val walkCount = m.count()
     require(walkCount <= 4 * MaxAffectedDocs,
       s"cluster maintenance walk reached $walkCount docs (> ${4 * MaxAffectedDocs} " +
         "fail-fast bound): the batch merges clusters beyond the single-task " +
@@ -270,27 +292,21 @@ object ClusterIndex {
     // (membership row dead): keep a doc only if this batch touches it
     // or its membership row is LIVE — never resurrect a deleted doc
     val mNotDeleted = m.join(broadcast(deleted), Seq("doc_id"), "left_anti")
-    val mLive = mNotDeleted.join(
-      broadcast(membOf(spark, membRoot, mNotDeleted).select(col("doc_id"))
-        .union(seeds).distinct()),
-      Seq("doc_id"), "left_semi").localCheckpoint()
     // the cap bounds the RE-SOLVED set (mLive is what feeds the edge
     // build and the single-task solver) — counting m instead would let
     // accumulated tombstones and this batch's deletes inflate the count
     // and spuriously demand a bootstrap recompute
-    val mCount = mLive.count()
+    val (mLive, mCount) = checkpointCounted(mNotDeleted.join(
+      broadcast(membOf(spark, membRoot, mNotDeleted).select(col("doc_id"))
+        .union(seeds).distinct()),
+      Seq("doc_id"), "left_semi"))
     require(mCount <= MaxAffectedDocs,
       s"cluster maintenance would touch $mCount docs (> $MaxAffectedDocs cap): " +
         "the batch merges/splits clusters larger than the single-task re-solve " +
         "is sized for - run a bootstrap recompute instead")
 
     // 3. M's induced edges, from stored band rows only
-    val mBands = bandRowsFromIndex(spark, bandRoot, mLive)
-    val edges = mBands.as("a").join(mBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val (edges, nEdges) = edgesOf(bandRowsFromIndex(spark, bandRoot, mLive))
 
     // 4. re-solve and rewrite M's rows in both tables. Token counts
     // (q69's keeper metric) come from the batch for changed docs and
@@ -301,12 +317,11 @@ object ClusterIndex {
     // of magnitude more), so the single-task solver must not be
     // unconditional
     val labels =
-      if (edges.count() <= TextOps.LocalComponentsMaxEdges)
-        TextOps.componentLabelsLocal(edges).localCheckpoint()
+      if (nEdges <= TextOps.LocalComponentsMaxEdges) TextOps.componentLabelsLocal(edges)
       else TextOps.componentLabelsIterative(edges)
     val oldPairs = membOf(spark, membRoot, m) // pre-update assignment of M
       .select(col("doc_id"), col("rep").as("old_rep"), col("n_tokens"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val newTokens = changes
       .where(col("_change_type").isin("insert", "update_postimage"))
       .select(col("doc_id"),
@@ -320,7 +335,7 @@ object ClusterIndex {
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep"))
       .join(tokensOfM, Seq("doc_id"), "left")
       .select(col("doc_id"), col("rep"), coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
 
     // COMMIT ORDER CONTRACT: members-by-rep FIRST, membership LAST —
     // the batch watermark applyBatch consults lives on membRoot, so the

@@ -192,9 +192,9 @@ object ManifestFileIndex {
 
 /** `format("graft-manifest")` registration: resolves the snapshot
   * (current, `versionAsOf`, or `timestampAsOf` epoch-millis), builds
-  * the [[ManifestFileIndex]], infers the union schema from the listed
-  * files' footers (mergeSchema — a snapshot may mix file generations
-  * after add-column evolution), and returns a stock parquet
+  * the [[ManifestFileIndex]], takes the snapshot's union schema from
+  * its manifest ([[ManifestTable.schemaOf]] — a snapshot may mix file
+  * generations after add-column evolution), and returns a stock parquet
   * [[HadoopFsRelation]] over the manifest-backed index. */
 class ManifestSourceProvider extends RelationProvider
     with CreatableRelationProvider with StreamSinkProvider with DataSourceRegister {
@@ -282,10 +282,7 @@ class ManifestSourceProvider extends RelationProvider
     require(v >= 1 && v <= cur,
       s"graft-manifest: version $v out of range [1, $cur] at $root")
     val index = new ManifestFileIndex(spark, root, v)
-    val dataSchema = new ParquetFileFormat()
-      .inferSchema(spark, Map("mergeSchema" -> "true"), index.allStatuses)
-      .getOrElse(throw new IllegalStateException(
-        s"graft-manifest: could not infer schema from data files at $root v$v"))
+    val dataSchema = ManifestTable.schemaOf(spark, root, v)
     // A declared bucket layout (ManifestTable.declareBuckets) becomes a
     // REAL BucketSpec when — and only when — every listed file carries
     // Spark's bucket-id name suffix: the scan then reports

@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, floor, greatest, least, lit, max, min, pmod, shiftleft, when}
+import org.apache.spark.sql.graft.SqlShims
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -123,7 +125,7 @@ object ManifestTable {
     val lines = Files.readAllLines(manifestPath(root, v)).asScala.toSeq
       .map(_.stripTrailing).filter(_.nonEmpty)
     val v2 = lines.headOption.exists(_.startsWith(FormatHeader))
-    val parsed = (if (v2) lines.tail else lines)
+    val parsed = (if (v2) lines.tail.filterNot(_.startsWith(SchemaLine)) else lines)
       .map { line =>
         line.split('\t') match {
           case Array(rel)              => FileEntry("", rel)
@@ -175,6 +177,41 @@ object ManifestTable {
   /** First declared stats column ([[statsColumns]]) — the 1-D surface. */
   private[graft] def statsColumn(root: String, v: Int): Option[String] =
     statsColumns(root, v).headOption
+
+  /** Prefix of the manifest line (second, after the header) that
+    * records the snapshot's UNION SCHEMA as Spark JSON — the Delta
+    * `metaData.schemaString` shape. JSON escapes tab and newline, and
+    * an entry line never starts with '#' (escaped partition keys encode
+    * it, unpartitioned entries start with a tab), so the line cannot be
+    * read as an entry. */
+  private val SchemaLine = "#schema="
+
+  /** The union schema of committed version `v` — every field nullable,
+    * as a file relation reports it. Commits of this code record it in
+    * the manifest, so reads need no footer inference (one Spark job per
+    * read); a manifest written before the field existed falls back to
+    * `mergeSchema` inference over all of its files. */
+  private[graft] def schemaOf(spark: SparkSession, root: String, v: Int): StructType =
+    recordedSchema(root, v).getOrElse(spark.read.option("mergeSchema", "true")
+      .parquet(listedEntries(root, v).map(e => s"$root/${e.rel}"): _*).schema)
+
+  private def recordedSchema(root: String, v: Int): Option[StructType] =
+    Files.readAllLines(manifestPath(root, v)).asScala.find(_.startsWith(SchemaLine))
+      .map(l => DataType.fromJson(l.stripPrefix(SchemaLine)).asInstanceOf[StructType])
+
+  /** `files` of version `v` read in the version's union schema
+    * ([[schemaOf]]): files from before an add-column evolution
+    * null-fill the newer columns. No files gives an empty frame of that
+    * schema. With the schema recorded, building the frame infers nothing
+    * (Spark still lists more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files in a
+    * job). */
+  private def readFiles(spark: SparkSession, root: String, v: Int,
+      files: Seq[String]): DataFrame = {
+    val schema = schemaOf(spark, root, v)
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(files: _*)
+  }
 
   /** The transaction tag for maintenance batch `id` under `scope` (""
     * = the legacy unscoped form, `batch=<id>`; scoped tags spell
@@ -229,7 +266,7 @@ object ManifestTable {
       if (cur < 1) return cur
       try {
         return commitEntries(root, cur + 1, listedEntries(root, cur),
-          statsColumns(root, cur), Some(tag))
+          recordedSchema(root, cur), statsColumns(root, cur), Some(tag))
       } catch {
         case e: java.util.ConcurrentModificationException =>
           attempt += 1
@@ -348,9 +385,14 @@ object ManifestTable {
     * concurrency). A writer that crashes between manifest write and
     * pointer move leaves an orphan manifest at v > current that blocks
     * that version number; [[vacuum]] clears such orphans. On an object
-    * store the same slot is a conditional PUT (if-none-match). */
+    * store the same slot is a conditional PUT (if-none-match).
+    *
+    * `schema` is the snapshot's union schema, recorded for
+    * [[schemaOf]]; metadata-only commits that carry a pre-field
+    * manifest's entries have none to record. */
   private def commitEntries(root: String, v: Int, entries: Seq[FileEntry],
-      statsCols: Seq[String] = Nil, tag: Option[String] = None): Int = {
+      schema: Option[StructType], statsCols: Seq[String] = Nil,
+      tag: Option[String] = None): Int = {
     require(entries.nonEmpty, s"commit of v$v at $root lists no data files")
     require(statsCols.forall(c =>
         !c.contains('\n') && !c.contains('\t') && !c.contains(',') && c.nonEmpty),
@@ -366,9 +408,10 @@ object ManifestTable {
       else s"${e.part}\t${e.rel}\t" +
         e.stats.map { case (lo, hi) => s"$lo\t$hi" }.mkString("\t")
     }
+    val schemaLine = schema.map(s => SchemaLine + SqlShims.asNullable(s).json)
     try {
       Files.writeString(manifestPath(root, v),
-        (header +: lines).mkString("\n"),
+        ((header +: schemaLine.toSeq) ++ lines).mkString("\n"),
         java.nio.file.StandardOpenOption.CREATE_NEW, java.nio.file.StandardOpenOption.WRITE)
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -510,7 +553,7 @@ object ManifestTable {
       // for the declared column on every new file of this commit
       ManifestBloom.bloomColumn(root).foreach(c =>
         ManifestBloom.writeSidecars(df.sparkSession, root, entries, c))
-      commitEntries(root, v, entries, effStats, tag)
+      commitEntries(root, v, entries, Some(df.schema), effStats, tag)
     }
 
   /** BLIND-APPEND commit: write only the batch's data files and commit
@@ -519,13 +562,14 @@ object ManifestTable {
     * read-modify-write of existing data (the ingest fast path; row
     * dedup/replacement belongs to [[merge]]). Shared columns must keep
     * their types ([[alignSchemas]] validates against the current
-    * snapshot — retype/rename is a migration, rejected; at lake scale
-    * the schema would live in the manifest header rather than be
-    * re-inferred from footers). Stats columns inherit stickily like
-    * [[commit]]; each append's files carry their OWN min/max, so
-    * time/id-ordered ingest yields naturally disjoint per-batch stats
-    * and [[readWhere]]-style skipping works across append generations
-    * without any clustering pass. Appends entries in the unpartitioned
+    * snapshot's recorded schema — retype/rename is a migration,
+    * rejected), and the batch is written in the union column order, so
+    * the new manifest records the union without reading a footer. Stats
+    * columns inherit stickily like [[commit]]; each append's files
+    * carry their OWN min/max, so time/id-ordered ingest yields
+    * naturally disjoint per-batch stats and [[readWhere]]-style
+    * skipping works across append generations without any clustering
+    * pass. Appends entries in the unpartitioned
     * ("" part) form — a table maintained by [[mergePartitioned]]
     * should keep using it (a mixed layout triggers its legacy
     * full-rewrite conversion on the next partitioned merge). */
@@ -536,19 +580,19 @@ object ManifestTable {
       else {
         requireStatsCompatible(root, cur, statsCols)
         val effStats = if (statsCols.nonEmpty) statsCols else statsColumns(root, cur)
-        alignSchemas(readVersion(df.sparkSession, root, cur), df) // type-compat gate
+        val (_, b) = alignSchemas(readFiles(df.sparkSession, root, cur, Nil), df)
         val prev = listedEntries(root, cur)
         val v = cur + 1
         val dirName = newDataDirName(v)
         val dataDir = s"$root/data/$dirName"
-        df.write.mode("overwrite").parquet(dataDir)
+        b.write.mode("overwrite").parquet(dataDir)
         val files = listParquet(new File(dataDir))
           .map(f => FileEntry("", s"data/$dirName/$f"))
         require(files.nonEmpty, s"append produced no data files under $dataDir")
         val entries = withStats(df.sparkSession, root, files, effStats)
         ManifestBloom.bloomColumn(root).foreach(c => // sidecars for NEW files only
           ManifestBloom.writeSidecars(df.sparkSession, root, entries, c))
-        commitEntries(root, v, prev ++ entries, effStats)
+        commitEntries(root, v, prev ++ entries, Some(b.schema), effStats)
       }
     }
 
@@ -643,14 +687,13 @@ object ManifestTable {
   def read(spark: SparkSession, root: String): DataFrame =
     readVersion(spark, root, currentVersion(root))
 
-  /** Read a specific committed version (time travel). `mergeSchema`
-    * because a snapshot may mix file generations after add-column
-    * evolution ([[alignSchemas]]): untouched partitions keep their
-    * narrower files; the union schema null-fills them. */
+  /** Read a specific committed version (time travel), in its union
+    * schema ([[schemaOf]]): a snapshot may mix file generations after
+    * add-column evolution ([[alignSchemas]]) — untouched partitions keep
+    * their narrower files, and the union schema null-fills them. */
   def readVersion(spark: SparkSession, root: String, v: Int): DataFrame = {
     require(v >= 1, s"table at $root has no committed version (asked for $v)")
-    val files = listedEntries(root, v).map(e => s"$root/${e.rel}")
-    spark.read.option("mergeSchema", "true").parquet(files: _*)
+    readFiles(spark, root, v, listedEntries(root, v).map(e => s"$root/${e.rel}"))
   }
 
   /** PARTITION-SCOPED read of the current snapshot: only the files of
@@ -666,10 +709,8 @@ object ManifestTable {
       parts: Set[String]): DataFrame = {
     val cur = currentVersion(root)
     require(cur >= 1, s"table at $root has no committed version")
-    val files = listedEntries(root, cur)
-      .collect { case e if parts(unescapePathName(e.part)) => s"$root/${e.rel}" }
-    if (files.isEmpty) readVersion(spark, root, cur).limit(0)
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
+    readFiles(spark, root, cur, listedEntries(root, cur)
+      .collect { case e if parts(unescapePathName(e.part)) => s"$root/${e.rel}" })
   }
 
   /** Bucket-pruned KEYED read — the shared spine of every maintained-
@@ -692,17 +733,25 @@ object ManifestTable {
     // contract) and feed both consumers from the materialized rows.
     // Lazy (r21): the bucket-set collect below is the first action and
     // materializes it — an eager checkpoint was a whole extra job per
-    // probe. CONTRACT NOTE (ADVICE r20): the checkpoint blocks live in
-    // the block manager until the RDD is GC'd — batch-bounded per call,
-    // but a driver probing in a tight loop should expect storage to
-    // ebb with GC cycles, not instantly.
+    // probe — and it dedups per task ([[distinctValues]]), so the read
+    // costs that one job. CONTRACT NOTE (ADVICE r20): the checkpoint
+    // blocks live in the block manager until the RDD is GC'd —
+    // batch-bounded per call, but a driver probing in a tight loop
+    // should expect storage to ebb with GC cycles, not instantly.
     val k = keys.select(col(keyCol)).localCheckpoint(eager = false)
-    val buckets = k
-      .select(bucketIdColumn(col(keyCol), nBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0).toString).toSet
+    val buckets = distinctValues(k, bucketIdColumn(col(keyCol), nBuckets))
+      .map(_.getLong(0).toString)
     readPartitions(spark, root, buckets)
       .join(broadcast(k), Seq(keyCol), "left_semi")
   }
+
+  /** The distinct values of `c` over `df` without an exchange: each
+    * task dedups its own partition and the driver unions the sets. One
+    * job, where `distinct().collect()` adds a shuffle and, under AQE, a
+    * second job. Callers bound the set (bucket ids, one batch's
+    * partition values), so at most that many rows per task travel. */
+  private def distinctValues(df: DataFrame, c: Column): Set[Row] =
+    df.select(c).rdd.mapPartitions(_.toSet.iterator).collect().toSet
 
   /** Add-column schema evolution: conform BOTH sides to the union
     * schema — the existing snapshot's columns (in their order) plus the
@@ -743,7 +792,11 @@ object ManifestTable {
     *
     * This path rewrites the WHOLE table per merge — O(table) write
     * amplification. For a partitioned table use [[mergePartitioned]],
-    * which rewrites only the batch's partitions. */
+    * which rewrites only the batch's partitions.
+    *
+    * `merged` is written as it is read: the lazy read of version N
+    * cannot race the write of N+1, which lands in a fresh writer-unique
+    * directory ([[newDataDirName]]) and never touches N's files. */
   def merge(batch: DataFrame, root: String, key: Seq[String]): Int = {
     requireKeyColumns(batch, key)
     val spark = batch.sparkSession
@@ -752,10 +805,7 @@ object ManifestTable {
         val (e, b) = alignSchemas(read(spark, root), batch)
         Dedup.merge(e, b, key)
       } else batch
-    // materialize BEFORE the commit writes: `merged` lazily reads the
-    // current snapshot, and writing the new version must not race the
-    // read of the old one
-    commit(merged.localCheckpoint(), root)
+    commit(merged, root)
   }
 
   /** Spark escapes partition values Hive-style when building directory
@@ -809,10 +859,12 @@ object ManifestTable {
     * form of the reference's per-day upsert (calorista/main.py:146-161).
     *
     * Mechanics:
-    *  - the batch's distinct partition values are collected (bounded:
-    *    one micro-batch's partitions, not data);
+    *  - the batch is materialized ONCE, and its distinct partition
+    *    values are collected from those rows (bounded: one micro-batch's
+    *    partitions, not data);
     *  - only those partitions' current files are read and merged
-    *    (incoming wins on `key`);
+    *    (incoming wins on `key`) and written as they are read ([[merge]]
+    *    explains why no second materialization is needed);
     *  - the merged rows are written in ONE job via
     *    `partitionBy(__part)` under `data/v{N}/`; `__part` is a COPY of
     *    `partCol` cast to string, so the data files keep every original
@@ -860,16 +912,22 @@ object ManifestTable {
     }
 
     if (prev.isEmpty) {
-      commitRebasing(root, prev, writePartitioned(batch.localCheckpoint()), effStats, tag)
+      commitRebasing(spark, root, prev, writePartitioned(batch), batch.schema, effStats, tag)
     } else if (prev.exists(_.part.isEmpty)) {
       // legacy full-snapshot layout: one-time conversion to partitioned.
       // A full rewrite has no rebase (its data depends on EVERY
       // partition), so a lost race aborts via commitEntries directly.
       val (e0, b0) = alignSchemas(readVersion(spark, root, cur), batch)
       val merged = Dedup.merge(e0, b0, key)
-      commitEntries(root, v, writePartitioned(merged.localCheckpoint()), effStats, tag)
+      commitEntries(root, v, writePartitioned(merged), Some(merged.schema), effStats, tag)
     } else {
-      val touchedVals = batch.select(partStr).distinct().collect()
+      // the touched set and the written rows come from the SAME rows: a
+      // batch evaluated twice (nondeterministic, or its input moved)
+      // could write a partition the touched set missed from batch rows
+      // alone, and the rebasing commit would drop that partition's old
+      // files — rows lost
+      val b = batch.localCheckpoint(eager = false)
+      val touchedVals = distinctValues(b, partStr)
         .map(r => if (r.isNullAt(0)) null else r.getString(0))
       // Spark writes BOTH null and "" as __HIVE_DEFAULT_PARTITION__, and a
       // literal sentinel-valued string collides with them too — distinct
@@ -888,17 +946,11 @@ object ManifestTable {
       val existingFiles = prev.collect {
         case e if isTouched(e.part) => s"$root/${e.rel}"
       }
-      val merged =
-        if (existingFiles.isEmpty) batch
-        else {
-          // mergeSchema: touched partitions may span file generations
-          val (e0, b0) = alignSchemas(
-            spark.read.option("mergeSchema", "true").parquet(existingFiles: _*),
-            batch)
-          Dedup.merge(e0, b0, key)
-        }
-      val newEntries = writePartitioned(merged.localCheckpoint())
-      commitRebasing(root, prev, newEntries, effStats, tag)
+      // touched partitions may span file generations: read them in the
+      // table's union schema, which every new file is written in
+      val (e0, b0) = alignSchemas(readFiles(spark, root, cur, existingFiles), b)
+      val merged = if (existingFiles.isEmpty) b0 else Dedup.merge(e0, b0, key)
+      commitRebasing(spark, root, prev, writePartitioned(merged), merged.schema, effStats, tag)
     }
   }
 
@@ -926,10 +978,15 @@ object ManifestTable {
     *    content is unverifiable) aborts loudly; the caller re-runs the
     *    whole merge against the new version.
     *
+    * `schema` is that of the new files; the commit records the schema
+    * of the version it lands on plus `schema`'s new columns, so columns
+    * a winner added to other partitions stay in the table's schema
+    * (shared columns have one type: [[alignSchemas]] rejects retyping).
+    *
     * On an object store the same loop runs on conditional-PUT failures. */
-  private def commitRebasing(
+  private def commitRebasing(spark: SparkSession,
       root: String, baseEntries: Seq[FileEntry],
-      newEntries: Seq[FileEntry], statsCols: Seq[String] = Nil,
+      newEntries: Seq[FileEntry], schema: StructType, statsCols: Seq[String] = Nil,
       tag: Option[String] = None, maxAttempts: Int = 10,
       alsoTouched: Set[String] = Set.empty): Int = {
     raceHookForTests()
@@ -961,8 +1018,13 @@ object ManifestTable {
             ": a concurrent commit rewrote them after this merge read its base " +
             "version. Re-run the merge against the current version.")
       val untouchedNow = curEntries.filterNot(e => touched(e.part))
+      val union = if (cur < 1) schema else {
+        val base = schemaOf(spark, root, cur)
+        StructType(base.fields ++ schema.fields.filterNot(f => base.fieldNames.contains(f.name)))
+      }
       try {
-        return commitEntries(root, cur + 1, untouchedNow ++ newEntries, statsCols, tag)
+        return commitEntries(root, cur + 1, untouchedNow ++ newEntries, Some(union),
+          statsCols, tag)
       } catch {
         case e: java.util.ConcurrentModificationException =>
           if (attempt >= maxAttempts) throw e
@@ -999,13 +1061,12 @@ object ManifestTable {
       // ADVICE r20 safety valve: repartition(__part) funnels each
       // touched bucket into ONE writer task/file; a pathologically hot
       // bucket at production scale would become a single-task straggler
-      // writing an arbitrarily large file. maxRecordsPerFile caps the
-      // file size without changing the layout contract (extra files of
-      // a bucket still carry its bucket-id stamp). 0 (the Spark
-      // default) = off — the declared contract is that BUCKET COUNT is
-      // the file-sizing unit; deployments size the cap alongside it.
-      .option("maxRecordsPerFile",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_RECORDS_PER_FILE", "0"))
+      // writing an arbitrarily large file. The session conf
+      // `spark.sql.files.maxRecordsPerFile` caps the file size without
+      // changing the layout contract (extra files of a bucket still
+      // carry its bucket-id stamp). 0 (the Spark default) = off — the
+      // declared contract is that BUCKET COUNT is the file-sizing unit;
+      // deployments size the cap alongside it.
       .mode("overwrite").parquet(dataDir)
     val buckets = bucketLayout(root)
     Option(new File(dataDir).listFiles()).getOrElse(Array.empty)
@@ -1064,7 +1125,7 @@ object ManifestTable {
     val fragmented = byPart.filter(_._2.size >= minFiles).keySet
     if (fragmented.isEmpty) return cur
     val files = prev.collect { case e if fragmented(e.part) => s"$root/${e.rel}" }
-    val compacted0 = spark.read.parquet(files: _*)
+    val compacted0 = readFiles(spark, root, cur, files)
       // one task per fragmented partition → one output file per partition
       .repartition(fragmented.size, coalesce(col(partCol).cast("string"), lit(NullPartition)))
     // a stats-declaring table gets its rewrite ROW-GROUP-clustered: file
@@ -1075,12 +1136,12 @@ object ManifestTable {
     val compacted =
       if (sortCols.isEmpty) compacted0
       else compacted0.sortWithinPartitions(sortCols: _*)
-    val newEntries0 = writePartitionedData(compacted.localCheckpoint(), root, v, partCol)
+    val newEntries0 = writePartitionedData(compacted, root, v, partCol)
     val newEntries = withStats(spark, root, newEntries0, effStats)
     // same optimistic protocol as mergePartitioned: a maintenance job
     // racing a writer only aborts if the writer touched a partition
     // being compacted; disjoint activity rebases and both land
-    commitRebasing(root, prev, newEntries, effStats)
+    commitRebasing(spark, root, prev, newEntries, compacted.schema, effStats)
   }
 
   /** Partition-scoped REWRITE dropping rows that fail `keep` — the
@@ -1113,13 +1174,12 @@ object ManifestTable {
     if (deadParts.isEmpty) return cur
     def isDead(p: String) = deadParts(unescapePathName(p))
     val files = prev.collect { case e if isDead(e.part) => s"$root/${e.rel}" }
-    val kept = spark.read.option("mergeSchema", "true").parquet(files: _*)
-      .where(keep)
+    val kept = readFiles(spark, root, cur, files).where(keep)
     val newEntries = withStats(spark, root,
-      writePartitionedData(kept.localCheckpoint(), root, cur + 1, partCol), effStats)
+      writePartitionedData(kept, root, cur + 1, partCol), effStats)
     // boundary: EVERY partition dead and ZERO rows kept would commit an
-    // empty manifest — illegal by design (the table's schema lives only
-    // in parquet footers, so an empty table has no schema source). A
+    // empty manifest — illegal by design (a manifest from before the
+    // recorded schema has only its files' footers as a schema source). A
     // fully-retracted table keeps its dead rows until new data arrives;
     // readers filter them, so this no-op is invisible except in storage
     if (newEntries.isEmpty && prev.forall(e => isDead(e.part))) {
@@ -1132,7 +1192,7 @@ object ManifestTable {
     // must still leave the manifest, so it is declared touched
     // explicitly (commitRebasing otherwise derives touched from the
     // new entries alone and would carry the stale files forward)
-    commitRebasing(root, prev, newEntries, effStats,
+    commitRebasing(spark, root, prev, newEntries, kept.schema, effStats,
       alsoTouched = prev.collect { case e if isDead(e.part) => e.part }.toSet)
   }
 
@@ -1217,14 +1277,12 @@ object ManifestTable {
     def slice(v: Int): Option[DataFrame] = {
       val files = (if (v >= 1) listedEntries(root, v) else Nil)
         .collect { case e if changed(e.part) => s"$root/${e.rel}" }
-      if (files.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(files: _*))
+      if (files.isEmpty) None else Some(readFiles(spark, root, v, files))
     }
     (slice(fromV), slice(toV)) match {
       case (None, None) =>
         // nothing changed: empty frame in the current snapshot's shape
-        val shape = readVersion(spark, root, toV max 1).limit(0)
-        shape.withColumn("_change_type", lit("insert")).limit(0)
+        readFiles(spark, root, toV max 1, Nil).withColumn("_change_type", lit("insert"))
       case (None, Some(n)) => n.withColumn("_change_type", lit("insert"))
       case (Some(o), None) => o.withColumn("_change_type", lit("delete"))
       case (Some(o0), Some(n0)) =>
@@ -1284,7 +1342,7 @@ object ManifestTable {
       s"version $toVersion at $root is not retained (vacuumed?)")
     if (toVersion == cur) cur
     else commitEntries(root, cur + 1, listedEntries(root, toVersion),
-      statsColumns(root, toVersion))
+      recordedSchema(root, toVersion), statsColumns(root, toVersion))
   }
 
   /** DATA-SKIPPING read: rows of the current snapshot with the table's
@@ -1346,10 +1404,7 @@ object ManifestTable {
     }
     val pred = bounds.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduce(_ && _)
-    if (keep.isEmpty) readVersion(spark, root, cur).where(pred).limit(0)
-    else spark.read.option("mergeSchema", "true")
-      .parquet(keep.map(e => s"$root/${e.rel}"): _*)
-      .where(pred)
+    readFiles(spark, root, cur, keep.map(e => s"$root/${e.rel}")).where(pred)
   }
 
   /** Drop data files and manifests not referenced by the newest

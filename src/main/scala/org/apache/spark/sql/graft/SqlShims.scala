@@ -43,4 +43,11 @@ object SqlShims {
     * extension chain. */
   def bucketIdSuffix(id: Int): String =
     org.apache.spark.sql.execution.datasources.BucketingUtils.bucketIdToString(id)
+
+  /** `schema` with every field, element and value nullable — what a
+    * file relation reports for any parquet data schema, inferred or
+    * given (`private[spark]`). The manifest layer records this form so
+    * a recorded schema equals the one footer inference would return. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ClusterIndex, DedupIndex, ManifestTable}
+import graft.sources.{ClusterIndex, DedupIndex, DfIndex, ManifestTable, ModalityIndex}
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -64,6 +64,69 @@ class IndexLifecycleSpec extends SparkSpec {
       "a replay commits nothing")
   }
 
+  test("building a read, readPartitions or readChanges frame of a committed " +
+    "version starts no Spark job: the manifest records the schema") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-lifecycle-read").toString
+    val key = Seq("id", "day")
+    ManifestTable.mergePartitioned(Seq((1L, "d1", "a"), (2L, "d2", "b"))
+      .toDF("id", "day", "v"), root, key, "day")
+    ManifestTable.mergePartitioned(Seq((1L, "d1", "A", 0.5))
+      .toDF("id", "day", "v", "score"), root, key, "day")
+    val frames = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    assert(jobsOf {
+      frames += ManifestTable.read(spark, root)
+      frames += ManifestTable.readVersion(spark, root, 1)
+      frames += ManifestTable.readPartitions(spark, root, Set("d1"))
+      frames += ManifestTable.readPartitions(spark, root, Set("none"))
+      frames += ManifestTable.readChanges(spark, root, 1, 2, key, preimages = true)
+      frames += ManifestTable.readChanges(spark, root, 2, 2, key)
+      frames.foreach(_.schema)
+    } == 0)
+    assert(frames.head.columns.toSeq == Seq("id", "day", "v", "score"))
+    assert(frames(4).count() == 2, "one update: a pre- and a post-image")
+  }
+
+  /** Jobs of one non-replayed applyBatch per index family over a fixed
+    * corpus change (inserts, an update, a delete, a near-duplicate).
+    * The ceilings are the counts measured when they were set; they may
+    * only move down. */
+  test("one applyBatch per index family stays within its job ceiling") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-lifecycle-jobs").toString
+    val Seq(corpus, fp, band, df, cband, memb, rep, media) =
+      Seq("corpus", "fp", "band", "df", "cband", "memb", "rep", "media").map(t => s"$work/$t")
+    val docs = (1L to 12L).map(i => (i, s"$text number $i of the corpus"))
+    ManifestTable.merge(docs.toDF("doc_id", "text"), corpus, Seq("doc_id"))
+    val snap = ManifestTable.read(spark, corpus)
+    DedupIndex.bootstrapFpIndex(snap, fp)
+    DedupIndex.bootstrapBandIndex(snap, band)
+    DfIndex.bootstrapDfIndex(snap, df)
+    DedupIndex.bootstrapBandIndex(snap, cband)
+    ClusterIndex.bootstrap(snap, memb, rep)
+    ModalityIndex.bootstrapModalityIndex(
+      snap.select($"doc_id", org.apache.spark.sql.functions.length($"text").cast("long")
+        .as("n_chars")), media)
+    val v = ManifestTable.merge(Seq((3L, "fresh words for doc three"),
+        (13L, s"$text number 5 of the corpus"), (14L, "a new unrelated document"))
+      .toDF("doc_id", "text"), corpus, Seq("doc_id"))
+    ManifestTable.commit(ManifestTable.read(spark, corpus).where($"doc_id" =!= 7L), corpus)
+    val ch = ManifestTable.readChanges(spark, corpus, 1, v + 1, Seq("doc_id"), preimages = true)
+      .localCheckpoint()
+    val id = (v + 1).toLong
+    val jobs = Map(
+      "dedup" -> jobsOf(DedupIndex.applyBatch(ch, id, fp, band)),
+      "df" -> jobsOf(DfIndex.applyBatch(ch, id, df)),
+      "cluster" -> jobsOf(ClusterIndex.applyBatch(ch, id, cband, memb, rep)),
+      "media" -> jobsOf(ModalityIndex.applyBatch(ch, id, media)))
+    val ceilings = Map("dedup" -> 23, "df" -> 14, "cluster" -> 61, "media" -> 11)
+    ceilings.foreach { case (family, ceiling) =>
+      assert(jobs(family) <= ceiling, s"$family applyBatch ran ${jobs(family)} jobs")
+    }
+    assert(ClusterIndex.readMembership(spark, memb).where($"doc_id" === 7L).isEmpty,
+      "the batch was applied")
+  }
+
   private def mainSources: Seq[Path] =
     Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
@@ -93,7 +156,8 @@ class IndexLifecycleSpec extends SparkSpec {
 
   test("the retired benchmark and profile env knobs are read nowhere") {
     val knobs = Seq("BENCH_POOL", "SHUFFLE_CONC", "BENCH_ATTEMPTS", "CAL_IO_BASIS",
-      "BENCH_OUT", "PARALLELISM_FIRST", "ADVISORY_PART", "AQE_CACHED")
+      "BENCH_OUT", "PARALLELISM_FIRST", "ADVISORY_PART", "AQE_CACHED",
+      "MAX_RECORDS_PER_FILE")
     knobs.foreach(k => assert(containing(mainSources, "SPARK_GRAFT_" + k).isEmpty, k))
   }
 }

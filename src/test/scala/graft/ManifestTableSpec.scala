@@ -1077,4 +1077,80 @@ class ManifestTableSpec extends SparkSpec {
       .select($"id").as[Long].collect().toSet
     assert(got2 == Set(1L), s"NaN-stat file must be kept, not crash: $got2")
   }
+
+  test("mergePartitioned evaluates its batch ONCE: a partition value that changes " +
+    "between evaluations cannot make the commit drop a partition's existing rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-manifest-once").toString
+    val key = Seq("id", "day")
+    ManifestTable.mergePartitioned(
+      pdf((1L, "d0", "a"), (2L, "d1", "b"), (3L, "d1", "c")), root, key, "day")
+    // the first evaluation puts the row in d0, every later one in d1 —
+    // a partition that already holds rows
+    ManifestTableSpec.dayCalls.set(0)
+    val flip = org.apache.spark.sql.functions.udf { () =>
+      if (ManifestTableSpec.dayCalls.getAndIncrement() == 0) "d0" else "d1"
+    }.asNondeterministic()
+    val batch = spark.range(9L, 10L).select($"id", flip().as("day"), lit("z").as("v"))
+    ManifestTable.mergePartitioned(batch, root, key, "day")
+    val got = readPSet(root)
+    assert(Set((1L, "d0", "a"), (2L, "d1", "b"), (3L, "d1", "c")).subsetOf(got),
+      s"a pre-existing row was lost: $got")
+    assert(got.count(_._1 == 9L) == 1, s"the batch row lands once: $got")
+  }
+
+  test("every commit records its snapshot's union schema, equal to footer " +
+    "inference across add-column evolution; a manifest without it still reads") {
+    import spark.implicits._
+    def files(root: String, v: Int) = fileState(root, v).keys.map(r => s"$root/$r").toSeq
+    def inferred(root: String, v: Int) =
+      spark.read.option("mergeSchema", "true").parquet(files(root, v): _*).schema
+    def recordsSchema(root: String, v: Int) =
+      Files.readAllLines(Paths.get(root, s"manifest-v$v.json")).toArray
+        .exists(_.toString.startsWith("#schema="))
+    def assertRecorded(root: String, v: Int): Unit = {
+      assert(recordsSchema(root, v), s"manifest-v$v records no schema")
+      val (got, want) = (ManifestTable.schemaOf(spark, root, v), inferred(root, v))
+      assert(got == want, s"v$v recorded $got, inference gives $want")
+      assert(ManifestTable.readVersion(spark, root, v).schema == want)
+    }
+
+    // partitioned: each evolution touches one partition, so the snapshot
+    // mixes file generations; `score` is a non-nullable Double in the batch
+    val root = Files.createTempDirectory("graft-manifest-schema").toString
+    val key = Seq("id", "day")
+    ManifestTable.mergePartitioned(pdf((1L, "d1", "a"), (2L, "d2", "b")), root, key, "day")
+    ManifestTable.mergePartitioned(Seq((1L, "d1", "A", 0.9)).toDF("id", "day", "v", "score"),
+      root, key, "day")
+    ManifestTable.mergePartitioned(Seq((2L, "d2", "B", Seq("t"))).toDF("id", "day", "v", "tags"),
+      root, key, "day")
+    (1 to 3).foreach(assertRecorded(root, _))
+    assert(ManifestTable.read(spark, root).columns.toSeq ==
+      Seq("id", "day", "v", "score", "tags"))
+
+    // snapshot commit, then a reordered append that adds a column
+    val sroot = Files.createTempDirectory("graft-manifest-schema-s").toString
+    ManifestTable.commit(Seq((1L, "a")).toDF("x", "y"), sroot)
+    ManifestTable.append(Seq(("b", 2L, 3)).toDF("y", "x", "z"), sroot)
+    (1 to 2).foreach(assertRecorded(sroot, _))
+    assert(ManifestTable.read(spark, sroot).as[(Long, String, Option[Int])].collect().toSet ==
+      Set((1L, "a", None), (2L, "b", Some(3))))
+
+    // a manifest written before the field existed: inference fallback,
+    // and the next commit on top of it records the schema again
+    val m3 = Paths.get(root, "manifest-v3.json")
+    Files.writeString(m3, Files.readAllLines(m3).toArray.map(_.toString)
+      .filterNot(_.startsWith("#schema=")).mkString("\n"))
+    assert(!recordsSchema(root, 3))
+    assert(ManifestTable.read(spark, root).schema == inferred(root, 3))
+    assert(readPSet(root) == Set((1L, "d1", "A"), (2L, "d2", "B")))
+    ManifestTable.mergePartitioned(pdf((3L, "d3", "c")), root, key, "day")
+    assertRecorded(root, 4)
+  }
+}
+
+object ManifestTableSpec {
+  /** Calls of the nondeterministic partition UDF (executors share the
+    * test JVM in local mode). */
+  val dayCalls = new java.util.concurrent.atomic.AtomicInteger
 }
