@@ -3,6 +3,7 @@ package graft.sources
 import graft.functions.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexLifecycle.checkpointCounted
 
 /** Incrementally-maintained NEAR-DUP COMPONENTS over a [[ManifestTable]]
   * corpus — q54's clustering as a maintained table instead of a
@@ -65,15 +66,6 @@ object ClusterIndex {
 
   private def withRBucket(df: DataFrame): DataFrame =
     df.withColumn("rbucket", ManifestTable.bucketIdColumn(col("rep"), IndexBuckets))
-
-  /** `df` locally checkpointed, with its row count, from ONE job: the
-    * count runs over the checkpoint's own RDD (no aggregate exchange,
-    * which under AQE is a job of its own) and fills the lazy checkpoint
-    * as it goes. */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val c = df.localCheckpoint(eager = false)
-    (c, c.queryExecution.toRdd.count())
-  }
 
   /** Band-collision edges (doc_a < doc_b) among `bands`' docs,
     * materialized once with their count — the count picks the solver

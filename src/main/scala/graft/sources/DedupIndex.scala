@@ -77,51 +77,48 @@ object DedupIndex {
   /** Apply ONE corpus version's CDC events to the exact index table.
     * `changes` must carry preimages ([[ManifestTable.readChanges]]
     * `preimages = true`): an update's old fingerprint must decrement,
-    * or the index drifts. Only the changed docs are fingerprinted; the
-    * index contributes only the delta-touched rows (semi join against
-    * the BROADCAST delta), and the merge rewrites only their buckets. */
+    * or the index drifts. Only the changed docs are fingerprinted, and
+    * their net per-fp delta is added onto the stored counts
+    * ([[upsertRefCounts]]). */
   def maintainFpIndex(spark: SparkSession, changes: DataFrame, idxRoot: String,
-      tag: Option[String] = None): Int = {
-    // a no-op commit (compaction, idempotent re-merge) diffs to zero
-    // rows: nothing to merge, and a bootstrap from it would have no
-    // files to commit — the check is one job over the delta, never the index
-    if (changes.isEmpty) return ManifestTable.currentVersion(idxRoot)
-    // one materialization: the delta feeds the isEmpty guard, the
-    // bucket-set collect, and the merge join
-    val d = TextOps.withFingerprint(changes)
-      .select(col("fp"), sign.as("__sgn"))
-      .groupBy(col("fp"))
-      .agg(sum(col("__sgn")).as("d_docs"))
-      .where(col("d_docs") =!= 0L)
-      .localCheckpoint()
-    // a delta that NETS to zero (e.g. two docs swapping content in one
-    // commit) has no index rows to merge — committing an empty batch
-    // would fail, and there is nothing to record
-    if (d.isEmpty) return ManifestTable.currentVersion(idxRoot)
+      tag: Option[String] = None): Int =
+    upsertRefCounts(spark, TextOps.withFingerprint(changes)
+        .select(col("fp"), sign.as("__sgn"))
+        .groupBy(col("fp"))
+        .agg(sum(col("__sgn")).as("d_docs"))
+        .where(col("d_docs") =!= 0L),
+      idxRoot, "fp", "n_docs", IndexBuckets, tag)
+
+  /** The signed ref-count upsert of both ref-count indexes (this exact
+    * index and [[DfIndex]]): add a net `(keyCol, d_docs)` delta onto the
+    * stored `countCol` of each delta key and merge the sums back into
+    * the keys' hash buckets. The index contributes only the
+    * delta-touched rows, read from their buckets' partitions
+    * ([[ManifestTable.readKeyPruned]]: READ amplification matches the
+    * write bound, and the index is never streamed whole, let alone
+    * shuffled); they broadcast into the join. The delta feeds that read
+    * and the join, so it is one lazy checkpoint the read fills. A count
+    * reaching 0 is written as a tombstone (merge cannot delete); readers
+    * filter `countCol > 0`. */
+  private[sources] def upsertRefCounts(spark: SparkSession, delta: DataFrame,
+      idxRoot: String, keyCol: String, countCol: String, nBuckets: Int,
+      tag: Option[String]): Int = {
+    val d = delta.localCheckpoint(eager = false)
     val updated =
       if (ManifestTable.currentVersion(idxRoot) < 1)
-        d.select(col("fp"), col("d_docs").as("n_docs"))
+        d.select(col(keyCol), col("d_docs").as(countCol))
       else {
-        // READ amplification matches the WRITE bound: the delta's
-        // fingerprints live only in their hash-bucket partitions, so
-        // only those partitions' files are read — the index is never
-        // streamed whole, let alone shuffled
-        // ([[ManifestTable.readKeyPruned]], the shared pruned-read spine)
-        val touched = ManifestTable
-          .readKeyPruned(spark, idxRoot, "fp", IndexBuckets, d)
-          .select(col("fp"), col("n_docs"))
-        d.as("d").join(broadcast(touched.as("t")), Seq("fp"), "left_outer")
-          .select(col("fp"),
-            (coalesce(col("t.n_docs"), lit(0L)) + col("d.d_docs")).as("n_docs"))
+        val touched = ManifestTable.readKeyPruned(spark, idxRoot, keyCol, nBuckets, d)
+          .select(col(keyCol), col(countCol))
+        d.as("d").join(broadcast(touched.as("t")), Seq(keyCol), "left_outer")
+          .select(col(keyCol),
+            (coalesce(col(s"t.$countCol"), lit(0L)) + col("d.d_docs")).as(countCol))
       }
-    // rows reaching n_docs = 0 are written as tombstones (merge cannot
-    // delete); readFpIndex filters them
-    val rows = updated
-      .withColumn("bucket", ManifestTable.bucketIdColumn(col("fp"), IndexBuckets))
-      .select(col("bucket"), col("fp"), col("n_docs"))
-    ManifestTable.declareBuckets(idxRoot, "fp", IndexBuckets)
-    ManifestTable.mergePartitioned(rows, idxRoot, Seq("bucket", "fp"), "bucket",
-      tag = tag)
+    ManifestTable.declareBuckets(idxRoot, keyCol, nBuckets)
+    ManifestTable.mergePartitioned(
+      updated.withColumn("bucket", ManifestTable.bucketIdColumn(col(keyCol), nBuckets))
+        .select(col("bucket"), col(keyCol), col(countCol)),
+      idxRoot, Seq("bucket", keyCol), "bucket", tag = tag)
   }
 
   /** The live exact index (tombstones filtered). */
@@ -134,7 +131,7 @@ object DedupIndex {
     * Join shape (VERDICT r10 #1): a naive `batch LEFT index` lets Spark
     * broadcast only the RIGHT (index) side — not broadcastable at
     * 100 TB, so the probe would degrade to shuffling the ENTIRE index
-    * per ingest batch. Instead the probe reuses [[maintainFpIndex]]'s
+    * per ingest batch. Instead the probe reuses [[upsertRefCounts]]'s
     * own semi-first shape:
     *
     *  - `touched = index SEMI broadcast(batch.fp)` — the index streams
@@ -223,7 +220,6 @@ object DedupIndex {
     * upsert-only merge can never leave a stale band row behind. */
   def maintainBandIndex(spark: SparkSession, changes: DataFrame, idxRoot: String,
       tag: Option[String] = None): Int = {
-    if (changes.isEmpty) return ManifestTable.currentVersion(idxRoot)
     // one row per changed doc: latest image wins (delete rows have no
     // successor; update pre/post pairs collapse to the postimage)
     val changed = changes

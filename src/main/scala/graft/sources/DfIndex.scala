@@ -75,18 +75,18 @@ object DfIndex {
 
   /** Apply ONE corpus version's CDC events. `changes` must carry
     * preimages: an update's old tokens must decrement. Only changed
-    * docs re-tokenize; the index contributes only the delta-touched
-    * token buckets ([[ManifestTable.readKeyPruned]]); rows reaching
-    * zero become tombstones (readers filter `df_docs > 0`). */
+    * docs re-tokenize, and their net per-token delta is added onto the
+    * stored counts ([[DedupIndex.upsertRefCounts]]); rows reaching zero
+    * become tombstones (readers filter `df_docs > 0`). */
   def maintainDfIndex(spark: SparkSession, changes: DataFrame, idxRoot: String,
       tag: Option[String] = None): Int = {
-    if (changes.isEmpty) return ManifestTable.currentVersion(idxRoot)
     val signed = changes.where(sign.isNotNull)
       .select(col("doc_id"), col("text"), sign.as("__sgn"))
     // ±1 per DISTINCT token per changed doc image, then net per token;
     // the corpus-size delta nets insert-vs-delete doc counts under the
     // reserved MetaToken (no real token can alias it — see above; "" is
-    // a REAL token, contributed by empty-text docs)
+    // a REAL token, contributed by empty-text docs). The meta key hashes
+    // into a normal bucket, so one pruned read serves both.
     val tokenDelta = signed
       .select(col("doc_id"), col("__sgn"),
         explode(array_distinct(TextOps.tokens(col("text")))).as("token"))
@@ -95,26 +95,8 @@ object DfIndex {
     val nDelta = signed.agg(sum(col("__sgn")).as("d_docs"))
       .where(col("d_docs").isNotNull && col("d_docs") =!= 0L)
       .select(lit(MetaToken).as("token"), col("d_docs"))
-    val d = tokenDelta.union(nDelta).localCheckpoint()
-    if (d.isEmpty) return ManifestTable.currentVersion(idxRoot)
-    val updated =
-      if (ManifestTable.currentVersion(idxRoot) < 1)
-        d.select(col("token"), col("d_docs").as("df_docs"))
-      else {
-        // one pruned read serves token rows AND the meta row — the meta
-        // key hashes into a normal bucket like everything else
-        val touched = ManifestTable
-          .readKeyPruned(spark, idxRoot, "token", IndexBuckets, d)
-          .select(col("token"), col("df_docs"))
-        d.as("d").join(broadcast(touched.as("t")), Seq("token"), "left_outer")
-          .select(col("token"),
-            (coalesce(col("t.df_docs"), lit(0L)) + col("d.d_docs")).as("df_docs"))
-      }
-    val rows = withBucket(updated)
-      .select(col("bucket"), col("token"), col("df_docs"))
-    ManifestTable.declareBuckets(idxRoot, "token", IndexBuckets)
-    ManifestTable.mergePartitioned(rows, idxRoot, Seq("bucket", "token"), "bucket",
-      tag = tag)
+    DedupIndex.upsertRefCounts(spark, tokenDelta.union(nDelta), idxRoot,
+      "token", "df_docs", IndexBuckets, tag)
   }
 
   /** Age zeroed ref-counts out of the vocab table

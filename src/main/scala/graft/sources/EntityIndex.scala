@@ -280,10 +280,9 @@ object EntityIndex {
     if (transNames.isEmpty) {
       // count-only batch: entities and blocks are untouched; the
       // membership merge still carries the tag (it is the watermark)
-      if (!countOnly.isEmpty)
-        commitMembership(countOnly.select(col("name"), col("entity"),
-          col("new_n").as("n_records")).withColumn("live", lit(true)),
-          membRoot, tag)
+      commitMembership(countOnly.select(col("name"), col("entity"),
+        col("new_n").as("n_records")).withColumn("live", lit(true)),
+        membRoot, tag)
       return
     }
 
@@ -438,7 +437,7 @@ object EntityIndex {
         .withColumn("live", lit(true))
         .union(EntityOps.blocksOfNames(r, blockers)
           .withColumn("live", lit(false)))
-      if (!rows.isEmpty) commitBlocks(rows, blockRoot, tag)
+      commitBlocks(rows, blockRoot, tag)
     }
     applyClusters(spark, a, r, c, blockRoot, membRoot, entRoot, cap, tag,
       blockers)

@@ -18,8 +18,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    pointer swap ([[ManifestTable.batchTag]]). Each table keeps its
   *    OWN watermark, so a crash between two tables' commits replays the
   *    batch with only the lagging tables re-applying, and a fully
-  *    replayed batch is skipped before any Spark job runs. A delta
-  *    that nets to zero commits nothing and records no tag — harmless,
+  *    replayed batch is skipped before any Spark job runs.
+  *  - EMPTY DELTAS: the delta is materialized and counted in one job,
+  *    and an empty one runs no step. A step whose delta nets to zero
+  *    rows hands [[ManifestTable.mergePartitioned]] an empty batch,
+  *    which commits nothing. Either way no tag is recorded — harmless,
   *    because replaying a no-op is a no-op.
   *  - POLLING ([[refresh]]): corpus versions are the batch ids, under
   *    the family's shared poll scope, so pollers racing the same
@@ -60,7 +63,8 @@ private[graft] final class IndexLifecycle(key: String, pollScope: String,
     val lagging = tables.filter { case (root, _) =>
       batchId > ManifestTable.lastBatchTag(root, scope) }
     if (lagging.isEmpty) return
-    val ch = changes.localCheckpoint()
+    val (ch, n) = IndexLifecycle.checkpointCounted(changes)
+    if (n == 0) return
     val tag = Some(ManifestTable.batchTag(scope, batchId))
     lagging.foreach { case (_, step) => step(ch, tag) }
   }
@@ -75,11 +79,12 @@ private[graft] final class IndexLifecycle(key: String, pollScope: String,
       .filter(_._1 < toV.toLong)
     if (lagging.isEmpty) return
     val tag = Some(ManifestTable.batchTag(pollScope, toV.toLong))
-    val reads = scala.collection.mutable.Map.empty[Int, DataFrame]
+    val reads = scala.collection.mutable.Map.empty[Int, (DataFrame, Long)]
     lagging.foreach { case (w, step) =>
       val base = math.max(fromV.toLong, w).toInt
-      step(reads.getOrElseUpdate(base,
-        IndexLifecycle.changes(spark, corpusRoot, key, base, toV).localCheckpoint()), tag)
+      val (ch, n) = reads.getOrElseUpdate(base, IndexLifecycle.checkpointCounted(
+        IndexLifecycle.changes(spark, corpusRoot, key, base, toV)))
+      if (n > 0) step(ch, tag)
     }
     tables.foreach { case (root, _) =>
       ManifestTable.advanceBatchWatermark(root, pollScope, toV.toLong) }
@@ -100,6 +105,15 @@ private[graft] object IndexLifecycle {
 
   /** Apply one CDC batch `(changes, batchId, scope)` exactly-once. */
   type Apply = (DataFrame, Long, String) => Unit
+
+  /** `df` locally checkpointed, with its row count, from ONE job: the
+    * count runs over the checkpoint's own RDD (no aggregate exchange,
+    * which under AQE is a job of its own) and fills the lazy checkpoint
+    * as it goes. */
+  private[sources] def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val c = df.localCheckpoint(eager = false)
+    (c, c.queryExecution.toRdd.count())
+  }
 
   /** The CDC events of corpus versions `(fromV, toV]`, preimages on —
     * every maintain step needs an update's old image to retract it. */

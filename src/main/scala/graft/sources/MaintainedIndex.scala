@@ -122,9 +122,6 @@ private[graft] trait MaintainedIndex {
     * not rewritten. */
   protected final def maintainIndex(changes: DataFrame, idxRoot: String,
       tag: Option[String]): Int = {
-    // a no-op commit (compaction, idempotent re-merge) diffs to zero
-    // rows — the check is one job over the delta, never the index
-    if (changes.isEmpty) return ManifestTable.currentVersion(idxRoot)
     val signed = changes.where(signCol.isNotNull)
       .select(changeCols :+ signCol.as("__sgn"): _*)
     val docCols = signed.columns.filterNot(_ == "__sgn").map(col).toSeq
@@ -147,12 +144,8 @@ private[graft] trait MaintainedIndex {
           .select(mergeKeyCols.map(col) ++
             payloadCols.map(c => col(s"r.$c").as(c)) :+
             col("r.alive").as("alive"): _*)
-    val d = collapsed.localCheckpoint()
-    // a delta that NETS to zero has no rows to merge — committing an
-    // empty batch would fail, and there is nothing to record
-    if (d.isEmpty) return ManifestTable.currentVersion(idxRoot)
     ManifestTable.declareBuckets(idxRoot, bucketKey, IndexBuckets)
-    ManifestTable.mergePartitioned(withBucket(d).select(storedCols: _*),
+    ManifestTable.mergePartitioned(withBucket(collapsed).select(storedCols: _*),
       idxRoot, "bucket" +: mergeKeyCols, "bucket", tag = tag)
   }
 

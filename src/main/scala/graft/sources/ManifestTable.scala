@@ -389,11 +389,13 @@ object ManifestTable {
     *
     * `schema` is the snapshot's union schema, recorded for
     * [[schemaOf]]; metadata-only commits that carry a pre-field
-    * manifest's entries have none to record. */
+    * manifest's entries have none to record. A manifest with no files
+    * must record one: it is the only schema source its readers have. */
   private def commitEntries(root: String, v: Int, entries: Seq[FileEntry],
       schema: Option[StructType], statsCols: Seq[String] = Nil,
       tag: Option[String] = None): Int = {
-    require(entries.nonEmpty, s"commit of v$v at $root lists no data files")
+    require(entries.nonEmpty || schema.isDefined,
+      s"commit of v$v at $root lists no data files and records no schema")
     require(statsCols.forall(c =>
         !c.contains('\n') && !c.contains('\t') && !c.contains(',') && c.nonEmpty),
       s"stats column names $statsCols must not contain tab/newline/comma")
@@ -885,7 +887,18 @@ object ManifestTable {
     * `statsCol` declares (sticky, inherited from the manifest header on
     * later merges) a numeric column whose per-file min/max is recorded
     * for [[readWhere]] data skipping; untouched partitions keep their
-    * previously recorded stats verbatim. */
+    * previously recorded stats verbatim.
+    *
+    * EMPTY BATCHES: on a table that already has a version, a batch with
+    * no rows commits nothing — no data write, no manifest, no tag — and
+    * the current version is returned. The touched-partition collect
+    * tells, so the rule costs no job of its own. It is the one
+    * empty-delta rule of every maintained index: a delta that nets to
+    * zero rows is a no-op without a guard of its own, and the tag it
+    * does not record is harmless, because replaying a no-op is a no-op.
+    * A FIRST commit (no version yet) lands even when empty, as a
+    * manifest with no files that records the batch's schema, so an
+    * empty bootstrap leaves a readable table. */
   def mergePartitioned(
       batch: DataFrame, root: String, key: Seq[String], partCol: String,
       statsCol: Option[String] = None, tag: Option[String] = None,
@@ -901,57 +914,57 @@ object ManifestTable {
     val spark = batch.sparkSession
     val cur = currentVersion(root)
     val v = cur + 1
-    val prev = if (cur >= 1) listedEntries(root, cur) else Nil
     requireStatsCompatible(root, cur, statsCol.toSeq)
     val effStats = statsCol.map(Seq(_)).getOrElse(statsColumns(root, cur))
-
-    val partStr = col(partCol).cast("string")
     def writePartitioned(df: DataFrame): Seq[FileEntry] = {
       val es = writePartitionedData(df, root, v, partCol, cluster)
       withStats(spark, root, es, effStats)
     }
 
-    if (prev.isEmpty) {
-      commitRebasing(spark, root, prev, writePartitioned(batch), batch.schema, effStats, tag)
-    } else if (prev.exists(_.part.isEmpty)) {
+    if (cur < 1)
+      return commitRebasing(spark, root, Nil, writePartitioned(batch), batch.schema,
+        effStats, tag)
+    val prev = listedEntries(root, cur)
+    // the touched set and the written rows come from the SAME rows: a
+    // batch evaluated twice (nondeterministic, or its input moved)
+    // could write a partition the touched set missed from batch rows
+    // alone, and the rebasing commit would drop that partition's old
+    // files — rows lost
+    val b = batch.localCheckpoint(eager = false)
+    val touchedVals = distinctValues(b, col(partCol).cast("string"))
+      .map(r => if (r.isNullAt(0)) null else r.getString(0))
+    if (touchedVals.isEmpty) return cur
+    // Spark writes BOTH null and "" as __HIVE_DEFAULT_PARTITION__, and a
+    // literal sentinel-valued string collides with them too — distinct
+    // keys silently folding into one partition. Reject the two ambiguous
+    // string values rather than mis-merge (ADVICE r4); null itself is
+    // fine and owns the sentinel directory.
+    require(!touchedVals.contains(""),
+      s"mergePartitioned: empty-string $partCol is not supported " +
+        "(Spark conflates it with null in the partition directory name)")
+    require(!touchedVals.contains(NullPartition),
+      s"mergePartitioned: literal '$NullPartition' $partCol is not supported " +
+        "(it is Spark's null-partition directory sentinel)")
+    if (prev.exists(_.part.isEmpty)) {
       // legacy full-snapshot layout: one-time conversion to partitioned.
       // A full rewrite has no rebase (its data depends on EVERY
       // partition), so a lost race aborts via commitEntries directly.
-      val (e0, b0) = alignSchemas(readVersion(spark, root, cur), batch)
+      val (e0, b0) = alignSchemas(readVersion(spark, root, cur), b)
       val merged = Dedup.merge(e0, b0, key)
-      commitEntries(root, v, writePartitioned(merged), Some(merged.schema), effStats, tag)
-    } else {
-      // the touched set and the written rows come from the SAME rows: a
-      // batch evaluated twice (nondeterministic, or its input moved)
-      // could write a partition the touched set missed from batch rows
-      // alone, and the rebasing commit would drop that partition's old
-      // files — rows lost
-      val b = batch.localCheckpoint(eager = false)
-      val touchedVals = distinctValues(b, partStr)
-        .map(r => if (r.isNullAt(0)) null else r.getString(0))
-      // Spark writes BOTH null and "" as __HIVE_DEFAULT_PARTITION__, and a
-      // literal sentinel-valued string collides with them too — distinct
-      // keys silently folding into one partition. Reject the two ambiguous
-      // string values rather than mis-merge (ADVICE r4); null itself is
-      // fine and owns the sentinel directory.
-      require(!touchedVals.contains(""),
-        s"mergePartitioned: empty-string $partCol is not supported " +
-          "(Spark conflates it with null in the partition directory name)")
-      require(!touchedVals.contains(NullPartition),
-        s"mergePartitioned: literal '$NullPartition' $partCol is not supported " +
-          "(it is Spark's null-partition directory sentinel)")
-      val touched = touchedVals.map(p => if (p == null) NullPartition else p).toSet
-      // manifest keys are escaped dir-name forms; compare via unescape
-      def isTouched(p: String): Boolean = touched(unescapePathName(p))
-      val existingFiles = prev.collect {
-        case e if isTouched(e.part) => s"$root/${e.rel}"
-      }
-      // touched partitions may span file generations: read them in the
-      // table's union schema, which every new file is written in
-      val (e0, b0) = alignSchemas(readFiles(spark, root, cur, existingFiles), b)
-      val merged = if (existingFiles.isEmpty) b0 else Dedup.merge(e0, b0, key)
-      commitRebasing(spark, root, prev, writePartitioned(merged), merged.schema, effStats, tag)
+      return commitEntries(root, v, writePartitioned(merged), Some(merged.schema),
+        effStats, tag)
     }
+    val touched = touchedVals.map(p => if (p == null) NullPartition else p)
+    // manifest keys are escaped dir-name forms; compare via unescape
+    def isTouched(p: String): Boolean = touched(unescapePathName(p))
+    val existingFiles = prev.collect {
+      case e if isTouched(e.part) => s"$root/${e.rel}"
+    }
+    // touched partitions may span file generations: read them in the
+    // table's union schema, which every new file is written in
+    val (e0, b0) = alignSchemas(readFiles(spark, root, cur, existingFiles), b)
+    val merged = if (existingFiles.isEmpty) b0 else Dedup.merge(e0, b0, key)
+    commitRebasing(spark, root, prev, writePartitioned(merged), merged.schema, effStats, tag)
   }
 
   /** Test seam for the cross-process race specs: invoked once between a

@@ -119,22 +119,20 @@ object StatsIndex {
   /** Apply ONE corpus version's CDC events: aggregate the signed
     * centered delta (ONE pass over the delta only) and add it onto the
     * stored sums — a 2,209-row read-modify-merge, never a corpus
-    * scan. `changes` must carry preimages. */
+    * scan. The join runs from the delta side, so an empty delta is an
+    * empty batch. `changes` must carry preimages. */
   def maintain(spark: SparkSession, changes: DataFrame, root: String,
       tag: Option[String] = None): Int = {
-    if (changes.isEmpty) return ManifestTable.currentVersion(root)
     val mu0 = frozenCenter(spark, root)
     require(mu0.nonEmpty, "stats table not bootstrapped")
     val delta = momentTriples(
       changes.where(sign.isNotNull)
         .select(centered(mu0).as("cv"), sign.as("sgn")), mu0.length)
-      .localCheckpoint()
-    if (delta.isEmpty) return ManifestTable.currentVersion(root)
     val stored = readStats(spark, root).where(col("j") =!= -2)
-    val updated = stored.as("o")
-      .join(delta.as("d"), Seq("i", "j"), "full_outer")
+    val updated = delta.as("d")
+      .join(stored.as("o"), Seq("i", "j"), "left_outer")
       .select(col("i"), col("j"),
-        (coalesce(col("o.s"), lit(0.0)) + coalesce(col("d.s"), lit(0.0))).as("s"))
+        (coalesce(col("o.s"), lit(0.0)) + col("d.s")).as("s"))
     ManifestTable.mergePartitioned(
       updated.withColumn("part", lit(0))
         .select(col("part"), col("i"), col("j"), col("s")),

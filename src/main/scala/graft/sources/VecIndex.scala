@@ -73,7 +73,6 @@ object VecIndex {
     * key, so an upsert-only merge fully retracts them. */
   def maintain(spark: SparkSession, changes: DataFrame,
       centRoot: String, idxRoot: String, tag: Option[String] = None): Int = {
-    if (changes.isEmpty) return ManifestTable.currentVersion(idxRoot)
     val cent = readCentroids(spark, centRoot)
     val changed = changes
       .where(col("_change_type").isin("insert", "update_postimage", "delete"))

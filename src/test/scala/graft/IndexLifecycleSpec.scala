@@ -4,6 +4,7 @@ import graft.sources.{ClusterIndex, DedupIndex, DfIndex, ManifestTable, Modality
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
 /** Pins the shape of the one index lifecycle
@@ -87,44 +88,73 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(frames(4).count() == 2, "one update: a pre- and a post-image")
   }
 
+  /** A 12-doc corpus (version 1) with the four measured families
+    * bootstrapped from it: the corpus root and every table root by name. */
+  private def bootstrapped(prefix: String): (String, Map[String, String]) = {
+    import spark.implicits._
+    val work = Files.createTempDirectory(prefix).toString
+    val roots = Seq("fp", "band", "df", "cband", "memb", "rep", "media")
+      .map(t => t -> s"$work/$t").toMap
+    val corpus = s"$work/corpus"
+    val docs = (1L to 12L).map(i => (i, s"$text number $i of the corpus"))
+    ManifestTable.merge(docs.toDF("doc_id", "text"), corpus, Seq("doc_id"))
+    val snap = ManifestTable.read(spark, corpus)
+    DedupIndex.bootstrapFpIndex(snap, roots("fp"))
+    DedupIndex.bootstrapBandIndex(snap, roots("band"))
+    DfIndex.bootstrapDfIndex(snap, roots("df"))
+    DedupIndex.bootstrapBandIndex(snap, roots("cband"))
+    ClusterIndex.bootstrap(snap, roots("memb"), roots("rep"))
+    ModalityIndex.bootstrapModalityIndex(
+      snap.select($"doc_id", org.apache.spark.sql.functions.length($"text").cast("long")
+        .as("n_chars")), roots("media"))
+    (corpus, roots)
+  }
+
+  /** Jobs of one applyBatch of `ch` as batch `id` per index family. */
+  private def familyJobs(ch: DataFrame, id: Long, t: Map[String, String]): Map[String, Int] =
+    Map(
+      "dedup" -> jobsOf(DedupIndex.applyBatch(ch, id, t("fp"), t("band"))),
+      "df" -> jobsOf(DfIndex.applyBatch(ch, id, t("df"))),
+      "cluster" -> jobsOf(ClusterIndex.applyBatch(ch, id, t("cband"), t("memb"), t("rep"))),
+      "media" -> jobsOf(ModalityIndex.applyBatch(ch, id, t("media"))))
+
   /** Jobs of one non-replayed applyBatch per index family over a fixed
     * corpus change (inserts, an update, a delete, a near-duplicate).
     * The ceilings are the counts measured when they were set; they may
     * only move down. */
   test("one applyBatch per index family stays within its job ceiling") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-lifecycle-jobs").toString
-    val Seq(corpus, fp, band, df, cband, memb, rep, media) =
-      Seq("corpus", "fp", "band", "df", "cband", "memb", "rep", "media").map(t => s"$work/$t")
-    val docs = (1L to 12L).map(i => (i, s"$text number $i of the corpus"))
-    ManifestTable.merge(docs.toDF("doc_id", "text"), corpus, Seq("doc_id"))
-    val snap = ManifestTable.read(spark, corpus)
-    DedupIndex.bootstrapFpIndex(snap, fp)
-    DedupIndex.bootstrapBandIndex(snap, band)
-    DfIndex.bootstrapDfIndex(snap, df)
-    DedupIndex.bootstrapBandIndex(snap, cband)
-    ClusterIndex.bootstrap(snap, memb, rep)
-    ModalityIndex.bootstrapModalityIndex(
-      snap.select($"doc_id", org.apache.spark.sql.functions.length($"text").cast("long")
-        .as("n_chars")), media)
+    val (corpus, t) = bootstrapped("graft-lifecycle-jobs")
     val v = ManifestTable.merge(Seq((3L, "fresh words for doc three"),
         (13L, s"$text number 5 of the corpus"), (14L, "a new unrelated document"))
       .toDF("doc_id", "text"), corpus, Seq("doc_id"))
     ManifestTable.commit(ManifestTable.read(spark, corpus).where($"doc_id" =!= 7L), corpus)
     val ch = ManifestTable.readChanges(spark, corpus, 1, v + 1, Seq("doc_id"), preimages = true)
       .localCheckpoint()
-    val id = (v + 1).toLong
-    val jobs = Map(
-      "dedup" -> jobsOf(DedupIndex.applyBatch(ch, id, fp, band)),
-      "df" -> jobsOf(DfIndex.applyBatch(ch, id, df)),
-      "cluster" -> jobsOf(ClusterIndex.applyBatch(ch, id, cband, memb, rep)),
-      "media" -> jobsOf(ModalityIndex.applyBatch(ch, id, media)))
-    val ceilings = Map("dedup" -> 23, "df" -> 14, "cluster" -> 61, "media" -> 11)
+    val jobs = familyJobs(ch, (v + 1).toLong, t)
+    val ceilings = Map("dedup" -> 19, "df" -> 11, "cluster" -> 60, "media" -> 8)
     ceilings.foreach { case (family, ceiling) =>
       assert(jobs(family) <= ceiling, s"$family applyBatch ran ${jobs(family)} jobs")
     }
-    assert(ClusterIndex.readMembership(spark, memb).where($"doc_id" === 7L).isEmpty,
+    assert(ClusterIndex.readMembership(spark, t("memb")).where($"doc_id" === 7L).isEmpty,
       "the batch was applied")
+  }
+
+  test("an applyBatch whose delta has no rows starts at most one job per family " +
+    "and commits nothing") {
+    import spark.implicits._
+    val (corpus, t) = bootstrapped("graft-lifecycle-empty")
+    // an idempotent re-merge: a commit that changes no row
+    val v = ManifestTable.merge(ManifestTable.read(spark, corpus).as[(Long, String)]
+      .collect().toSeq.toDF("doc_id", "text"), corpus, Seq("doc_id"))
+    val ch = ManifestTable.readChanges(spark, corpus, v - 1, v, Seq("doc_id"), preimages = true)
+      .localCheckpoint()
+    assert(ch.isEmpty)
+    val versions = t.view.mapValues(ManifestTable.currentVersion).toMap
+    val jobs = familyJobs(ch, v.toLong, t)
+    assert(jobs.values.forall(_ <= 1), s"jobs per family: $jobs")
+    assert(t.view.mapValues(ManifestTable.currentVersion).toMap == versions,
+      "an empty delta commits nothing")
   }
 
   private def mainSources: Seq[Path] =
@@ -134,13 +164,21 @@ class IndexLifecycleSpec extends SparkSpec {
   private def containing(files: Seq[Path], literal: String): Seq[String] =
     files.filter(p => Files.readString(p).contains(literal)).map(_.toString)
 
+  private def indexSources: Seq[Path] = mainSources.filter(p =>
+    p.getParent.endsWith(Paths.get("graft/sources")) &&
+      p.getFileName.toString.endsWith("Index.scala"))
+
   test("no index file reads CDC or opens a CDC stream itself") {
-    val indexes = mainSources.filter(p =>
-      p.getParent.endsWith(Paths.get("graft/sources")) &&
-        p.getFileName.toString.endsWith("Index.scala"))
+    val indexes = indexSources
     assert(indexes.size >= 10, s"index sources not found: $indexes")
     assert(containing(indexes, "ManifestTable.readChanges(").isEmpty)
     assert(containing(indexes, "\"graft-manifest-cdc\"").isEmpty)
+  }
+
+  test("no index file guards an empty delta itself: the lifecycle and " +
+    "mergePartitioned hold the one rule") {
+    assert(containing(indexSources, "changes.isEmpty").isEmpty)
+    assert(containing(indexSources, ".isEmpty) return ManifestTable.currentVersion").isEmpty)
   }
 
   test("the AQE session profile lives only in GraftSession") {

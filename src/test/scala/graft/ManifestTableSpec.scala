@@ -1146,6 +1146,35 @@ class ManifestTableSpec extends SparkSpec {
     assert(readPSet(root) == Set((1L, "d1", "A"), (2L, "d2", "B")))
     ManifestTable.mergePartitioned(pdf((3L, "d3", "c")), root, key, "day")
     assertRecorded(root, 4)
+
+    // an EMPTY first commit lands too: a manifest with no files whose
+    // recorded schema is the only schema source, and merges build on it
+    val eroot = Files.createTempDirectory("graft-manifest-schema-e").toString
+    assert(ManifestTable.mergePartitioned(pdf(), eroot, key, "day") == 1)
+    assert(recordsSchema(eroot, 1) && fileState(eroot, 1).isEmpty)
+    assert(ManifestTable.read(spark, eroot).schema ==
+      org.apache.spark.sql.graft.SqlShims.asNullable(pdf().schema))
+    assert(ManifestTable.read(spark, eroot).isEmpty)
+    ManifestTable.mergePartitioned(pdf((1L, "d1", "a")), eroot, key, "day")
+    assertRecorded(eroot, 2)
+    assert(readPSet(eroot) == Set((1L, "d1", "a")))
+  }
+
+  test("an empty mergePartitioned batch on a committed table commits nothing: " +
+    "the current version comes back, and no manifest, data dir or tag is written") {
+    val root = Files.createTempDirectory("graft-manifest-empty").toString
+    val key = Seq("id", "day")
+    val v = ManifestTable.mergePartitioned(pdf((1L, "d1", "a"), (2L, "d2", "b")),
+      root, key, "day", tag = Some(ManifestTable.batchTag("s", 1)))
+    def listing = (new File(root).list().toSet, new File(s"$root/data").list().toSet)
+    val before = listing
+    val empty = pdf((3L, "d3", "c")).where(lit(false))
+    assert(ManifestTable.mergePartitioned(empty, root, key, "day",
+      tag = Some(ManifestTable.batchTag("s", 2))) == v)
+    assert(ManifestTable.currentVersion(root) == v)
+    assert(listing == before, "no manifest-v* and no data/ directory")
+    assert(ManifestTable.lastBatchTag(root, "s") == 1L)
+    assert(readPSet(root) == Set((1L, "d1", "a"), (2L, "d2", "b")))
   }
 }
 
