@@ -13,6 +13,18 @@ object GraftSession {
     *     lets `Tables.load` floor them to micros (DuckDB's own ns→µs
     *     truncation, so oracle results line up exactly).
     *   - UTC + no UI: deterministic dates, no port squatting in CI.
+    *   - `artifact.isolation.enabled=false`: Spark 4 otherwise gives each
+    *     session its own artifact classloader, so every task runs under
+    *     `ExecutorClassLoader`, and each class name Janino fails to find
+    *     while a task compiles generated code is looked up on the driver
+    *     over RPC. graft adds no per-session jars or files, so isolation
+    *     protects nothing; tasks run under the application classloader
+    *     (perfbench `queries` CPU −29% on 4 cores).
+    *   - `fs.file.impl` = [[GraftLocalFileSystem]]: the checksummed local
+    *     filesystem without a forked `chmod` per file and directory a
+    *     write creates (a `maintain` benchmark run starts 811
+    *     processes without it, 6 with it, all Spark's own). Only
+    *     `file://` paths are affected.
     */
   val defaults: Seq[(String, String)] = Seq(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -24,7 +36,9 @@ object GraftSession {
     // (a cast(ts) workaround would block parquet filter pushdown).
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName)
 
   /** The AQE partition profile every graft main runs under (perfbench's
     * harness sets the same three values itself):

@@ -1181,24 +1181,24 @@ object ManifestTable {
         "partitioned layout")
     val effStats = statsColumns(root, cur)
     // partitions holding at least one dead row — pushed-filter scan
-    val deadParts = read(spark, root).where(!keep)
-      .select(coalesce(col(partCol).cast("string"), lit(NullPartition)).as("__p"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val deadParts = distinctValues(read(spark, root).where(!keep),
+      coalesce(col(partCol).cast("string"), lit(NullPartition))).map(_.getString(0))
     if (deadParts.isEmpty) return cur
     def isDead(p: String) = deadParts(unescapePathName(p))
     val files = prev.collect { case e if isDead(e.part) => s"$root/${e.rel}" }
     val kept = readFiles(spark, root, cur, files).where(keep)
     val newEntries = withStats(spark, root,
       writePartitionedData(kept, root, cur + 1, partCol), effStats)
-    // boundary: EVERY partition dead and ZERO rows kept would commit an
-    // empty manifest — illegal by design (a manifest from before the
-    // recorded schema has only its files' footers as a schema source). A
-    // fully-retracted table keeps its dead rows until new data arrives;
-    // readers filter them, so this no-op is invisible except in storage
-    if (newEntries.isEmpty && prev.forall(e => isDead(e.part))) {
+    // boundary: EVERY partition dead and ZERO rows kept commits a
+    // manifest with no files, whose recorded schema is its readers' only
+    // schema source. A manifest from before the schema line records none
+    // to carry: that table keeps its dead rows until new data arrives
+    // (readers filter them, so the no-op shows only in storage)
+    if (newEntries.isEmpty && prev.forall(e => isDead(e.part)) &&
+        recordedSchema(root, cur).isEmpty) {
       System.err.println(s"[manifest] rewriteWhere at $root matched every " +
-        "row of every partition; keeping the files (an empty commit has no " +
-        "schema source) - rewrite skipped")
+        "row of every partition of a manifest with no recorded schema; " +
+        "keeping the files - rewrite skipped")
       return cur
     }
     // a partition whose EVERY row was dead writes no new files — it

@@ -157,6 +157,37 @@ class IndexLifecycleSpec extends SparkSpec {
       "an empty delta commits nothing")
   }
 
+  /** Jobs of one call of each probe on the bootstrapped fixture: those
+    * started while its frame is built, and all of them once the frame
+    * is materialized through the noop sink (perfbench's probe op). The
+    * ceilings are the counts measured when they were set; they may only
+    * move down. */
+  test("each probe call stays within its job ceiling, building and in total") {
+    import spark.implicits._
+    val (_, t) = bootstrapped("graft-lifecycle-probe")
+    val arrivals = Seq((20L, s"$text number 3 of the corpus"), (21L, "a brand new document"))
+      .toDF("doc_id", "text")
+    val probes = Seq[(String, () => DataFrame)](
+      "exact" -> (() => DedupIndex.probeExact(arrivals, spark, t("fp"))),
+      "neardup" -> (() => DedupIndex.probeNearDup(arrivals, spark, t("band"))),
+      "tfidf" -> (() => DfIndex.probeTfIdf(arrivals, spark, t("df"))),
+      "keepers" -> (() => ClusterIndex.readKeepers(spark, t("memb"))))
+    val jobs = probes.map { case (name, probe) =>
+      var frame: DataFrame = null
+      val build = jobsOf { frame = probe() }
+      name -> (build, build + jobsOf(frame.write.format("noop").mode("overwrite").save()))
+    }.toMap
+    // building: probeExact's bucket-id collect; probeTfIdf's tf aggregate
+    // (AQE runs its shuffle when the lazy checkpoint takes the plan's
+    // RDD) and its bucket-id collect
+    val ceilings = Map("exact" -> (1, 4), "neardup" -> (0, 4), "tfidf" -> (2, 7),
+      "keepers" -> (0, 2))
+    ceilings.foreach { case (probe, (build, total)) =>
+      assert(jobs(probe)._1 <= build && jobs(probe)._2 <= total,
+        s"$probe: ${jobs(probe)} (building, total) jobs")
+    }
+  }
+
   private def mainSources: Seq[Path] =
     Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
@@ -184,6 +215,9 @@ class IndexLifecycleSpec extends SparkSpec {
   test("the AQE session profile lives only in GraftSession") {
     val outside = mainSources.filterNot(_.getFileName.toString == "GraftSession.scala")
     assert(containing(outside, "\"spark.sql.adaptive.").isEmpty)
+    // so do the artifact-classloader and file:// filesystem defaults
+    assert(containing(outside, "\"spark.sql.artifact.").isEmpty)
+    assert(containing(outside, "fs.file.impl").isEmpty)
     // every session is built there too, and only the four mains build one
     assert(containing(outside, "SparkSession.builder").isEmpty)
     assert(containing(outside, ".master(").isEmpty)

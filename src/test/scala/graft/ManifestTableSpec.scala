@@ -4,6 +4,7 @@ import graft.sources.{IncrementalView, ManifestTable}
 import java.io.File
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.lit
+import scala.jdk.CollectionConverters._
 
 /** The manifest-committed table's transactional contract: atomic
   * visibility, crash tolerance, snapshot isolation, idempotent merge,
@@ -1000,17 +1001,37 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.readVersion(spark, root, v1).count() == 5L)
   }
 
-  test("rewriteWhere on a FULLY-dead table no-ops instead of committing an " +
-    "empty (schema-less) manifest — a fully-retracted index keeps its " +
-    "tombstones until new data arrives") {
+  test("rewriteWhere on a FULLY-dead table commits a manifest with no files " +
+    "whose recorded schema keeps the table readable and mergeable") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-rewrite-alldead").toString
     ManifestTable.mergePartitioned(
       Seq((1L, "d1", false), (2L, "d2", false)).toDF("id", "day", "live"),
       root, Seq("id", "day"), "day")
     val v1 = ManifestTable.currentVersion(root)
-    // every row of every partition violates `keep`: must not throw, must
-    // not commit, table still readable with its schema
+    // every row of every partition violates `keep`: the purge commits a
+    // version that lists no files
+    assert(ManifestTable.rewriteWhere(spark, root, "day", $"live") == v1 + 1)
+    assert(ManifestTable.read(spark, root).inputFiles.isEmpty)
+    assert(ManifestTable.read(spark, root).columns.toSeq == Seq("id", "day", "live"))
+    assert(ManifestTable.read(spark, root).isEmpty)
+    ManifestTable.mergePartitioned(Seq((3L, "d1", true)).toDF("id", "day", "live"),
+      root, Seq("id", "day"), "day")
+    assert(ManifestTable.read(spark, root).as[(Long, String, Boolean)].collect().toSeq ==
+      Seq((3L, "d1", true)))
+  }
+
+  test("rewriteWhere on a FULLY-dead table whose manifest records no schema " +
+    "no-ops: the table keeps its tombstones until new data arrives") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-rewrite-alldead-legacy").toString
+    ManifestTable.mergePartitioned(
+      Seq((1L, "d1", false), (2L, "d2", false)).toDF("id", "day", "live"),
+      root, Seq("id", "day"), "day")
+    val v1 = ManifestTable.currentVersion(root)
+    val m = Paths.get(root, s"manifest-v$v1.json")
+    Files.writeString(m, Files.readAllLines(m).asScala
+      .filterNot(_.startsWith("#schema=")).mkString("\n"))
     assert(ManifestTable.rewriteWhere(spark, root, "day", $"live") == v1)
     assert(ManifestTable.currentVersion(root) == v1)
     assert(ManifestTable.read(spark, root).columns.toSeq == Seq("id", "day", "live"))
