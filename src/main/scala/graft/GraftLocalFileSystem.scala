@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import scala.jdk.CollectionConverters._
 
 /** The `file://` filesystem of every graft session
   * ([[GraftSession.defaults]]): Hadoop's checksummed `LocalFileSystem`,
@@ -16,20 +14,25 @@ import scala.jdk.CollectionConverters._
 class GraftLocalFileSystem extends LocalFileSystem(new GraftLocalFileSystem.InProcessChmod)
 
 object GraftLocalFileSystem {
-  /** `setPermission` through `Files.setPosixFilePermissions`: the same
-    * owner/group/other bits `chmod` would set. A sticky bit (which NIO
-    * cannot set) and a file store without a POSIX view fall back to
+  /** `setPermission` through the JDK's `unix:mode` attribute, one
+    * chmod(2) call with the mode stock Hadoop hands to `chmod %04o`:
+    * the permission's sticky and owner/group/other bits, and, as GNU
+    * chmod does for a 4-digit octal mode, a directory's setuid and
+    * setgid bits kept as they are (a setgid shared directory stays
+    * setgid). A file store without the `unix` view falls back to
     * Hadoop's own implementation. */
   class InProcessChmod extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit =
-      if (permission.getStickyBit) super.setPermission(p, permission)
-      else {
-        // PosixFilePermission lists OWNER_READ .. OTHERS_EXECUTE, the
-        // mode's bits 8 .. 0
-        val mode = permission.toShort.toInt
-        val bits = PosixFilePermission.values.filter(b => (mode >> (8 - b.ordinal) & 1) == 1)
-        try Files.setPosixFilePermissions(pathToFile(p).toPath, bits.toSet.asJava)
-        catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val file = pathToFile(p).toPath
+      val mode = try Some(Files.getAttribute(file, "unix:mode").asInstanceOf[Int])
+        catch { case _: UnsupportedOperationException | _: IllegalArgumentException => None }
+      mode match {
+        case None => super.setPermission(p, permission)
+        case Some(m) =>
+          // st_mode: S_IFMT 0170000, S_IFDIR 0040000, S_ISUID|S_ISGID 06000
+          val kept = if ((m & 0xF000) == 0x4000) m & 0xC00 else 0
+          Files.setAttribute(file, "unix:mode", Int.box(kept | permission.toShort & 0x3FF))
       }
+    }
   }
 }

@@ -15,11 +15,10 @@ object GraftSession {
     *   - UTC + no UI: deterministic dates, no port squatting in CI.
     *   - `artifact.isolation.enabled=false`: Spark 4 otherwise gives each
     *     session its own artifact classloader, so every task runs under
-    *     `ExecutorClassLoader`, and each class name Janino fails to find
-    *     while a task compiles generated code is looked up on the driver
-    *     over RPC. graft adds no per-session jars or files, so isolation
-    *     protects nothing; tasks run under the application classloader
-    *     (perfbench `queries` CPU −29% on 4 cores).
+    *     `ExecutorClassLoader`. graft adds no per-session jars or files,
+    *     so isolation protects nothing; tasks run under the application
+    *     classloader (perfbench `queries` `cpu_s` −29% on 4 cores, 10 of
+    *     10 pairs).
     *   - `fs.file.impl` = [[GraftLocalFileSystem]]: the checksummed local
     *     filesystem without a forked `chmod` per file and directory a
     *     write creates (a `maintain` benchmark run starts 811

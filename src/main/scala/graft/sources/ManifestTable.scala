@@ -1189,18 +1189,6 @@ object ManifestTable {
     val kept = readFiles(spark, root, cur, files).where(keep)
     val newEntries = withStats(spark, root,
       writePartitionedData(kept, root, cur + 1, partCol), effStats)
-    // boundary: EVERY partition dead and ZERO rows kept commits a
-    // manifest with no files, whose recorded schema is its readers' only
-    // schema source. A manifest from before the schema line records none
-    // to carry: that table keeps its dead rows until new data arrives
-    // (readers filter them, so the no-op shows only in storage)
-    if (newEntries.isEmpty && prev.forall(e => isDead(e.part)) &&
-        recordedSchema(root, cur).isEmpty) {
-      System.err.println(s"[manifest] rewriteWhere at $root matched every " +
-        "row of every partition of a manifest with no recorded schema; " +
-        "keeping the files - rewrite skipped")
-      return cur
-    }
     // a partition whose EVERY row was dead writes no new files — it
     // must still leave the manifest, so it is declared touched
     // explicitly (commitRebasing otherwise derives touched from the

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.ManifestTable
 import java.nio.file.{Files, Path => JPath}
-import java.nio.file.attribute.PosixFilePermissions
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{ChecksumException, Path, RawLocalFileSystem}
@@ -11,7 +10,8 @@ import scala.jdk.CollectionConverters._
 
 /** What [[GraftSession.defaults]] buys every session: tasks run under the
   * application classloader, and `file://` writes fork no process while
-  * keeping stock permissions and checksums. */
+  * keeping stock permissions (setgid directories included) and
+  * checksums. */
 class GraftSessionSpec extends SparkSpec {
 
   test("tasks run under the application classloader, not a per-session " +
@@ -40,8 +40,9 @@ class GraftSessionSpec extends SparkSpec {
     } finally rec.close()
   }
 
-  private def modeOf(p: JPath): String =
-    PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+  /** The full mode bits (setuid, setgid, sticky, owner/group/other). */
+  private def unixMode(p: JPath): String =
+    f"${Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xFFF}%04o"
 
   private def stockFs: RawLocalFileSystem = {
     val fs = new RawLocalFileSystem
@@ -49,39 +50,50 @@ class GraftSessionSpec extends SparkSpec {
     fs
   }
 
-  test("a partitioned merge forks no process and writes files and directories " +
-    "with the permission bits of a stock RawLocalFileSystem write") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-nofork").toString
-    val forks = processesStartedBy {
-      ManifestTable.mergePartitioned(Seq((1L, "d1", "a"), (2L, "d2", "b"))
-        .toDF("id", "day", "v"), root, Seq("id", "day"), "day")
-    }
-    assert(forks.isEmpty, forks)
+  // "" is a fresh temp directory; 2775 a setgid shared directory, whose
+  // setgid bit stock chmod keeps on the directories a write creates
+  for (parentMode <- Seq("", "2775")) {
+    val under = if (parentMode.isEmpty) "" else " under a setgid directory"
+    test(s"a partitioned merge$under forks no process and writes files and " +
+      "directories with the permission bits of a stock RawLocalFileSystem write") {
+      import spark.implicits._
+      val base = Files.createTempDirectory("graft-nofork")
+      if (parentMode.nonEmpty) {
+        Files.setAttribute(base, "unix:mode", Int.box(Integer.parseInt(parentMode, 8)))
+        assert(unixMode(base) == parentMode)
+      }
+      val root = base.resolve("t").toString
+      val forks = processesStartedBy {
+        ManifestTable.mergePartitioned(Seq((1L, "d1", "a"), (2L, "d2", "b"))
+          .toDF("id", "day", "v"), root, Seq("id", "day"), "day")
+      }
+      assert(forks.isEmpty, forks)
 
-    val stockDir = Files.createTempDirectory("graft-stock")
-    val fs = stockFs
-    fs.mkdirs(new Path(stockDir.resolve("d").toUri))
-    fs.create(new Path(stockDir.resolve("f").toUri), false).close()
-    val written = Files.walk(java.nio.file.Paths.get(root, "data")).iterator().asScala.toSeq
-    val (dirs, files) = written.partition(Files.isDirectory(_))
-    assert(files.exists(_.toString.endsWith(".parquet")) && dirs.size >= 3, written)
-    dirs.foreach(d => assert(modeOf(d) == modeOf(stockDir.resolve("d")), d))
-    files.foreach(f => assert(modeOf(f) == modeOf(stockDir.resolve("f")), f))
+      val (stockD, stockF) = (base.resolve("stock-d"), base.resolve("stock-f"))
+      val fs = stockFs
+      fs.mkdirs(new Path(stockD.toUri))
+      fs.create(new Path(stockF.toUri), false).close()
+      val written = Files.walk(java.nio.file.Paths.get(root, "data")).iterator().asScala.toSeq
+      val (dirs, files) = written.partition(Files.isDirectory(_))
+      assert(files.exists(_.toString.endsWith(".parquet")) && dirs.size >= 3, written)
+      dirs.foreach(d => assert(unixMode(d) == unixMode(stockD), d))
+      files.foreach(f => assert(unixMode(f) == unixMode(stockF), f))
+    }
   }
 
-  test("the filesystem sets any owner/group/other mode the way chmod does") {
+  test("the filesystem sets any mode on files and directories the way chmod does") {
     val dir = Files.createTempDirectory("graft-chmod")
     val fs = org.apache.hadoop.fs.FileSystem.get(dir.toUri, spark.sessionState.newHadoopConf())
     assert(fs.isInstanceOf[GraftLocalFileSystem], fs.getClass)
     val stock = stockFs
-    Seq("640", "751", "404", "000").foreach { m =>
+    for (m <- Seq("640", "751", "404", "000", "1777"); kind <- Seq("file", "dir")) {
       val perm = new FsPermission(m)
-      val (ours, theirs) = (dir.resolve(s"ours-$m"), dir.resolve(s"stock-$m"))
-      Seq(ours, theirs).foreach(Files.createFile(_))
+      val (ours, theirs) = (dir.resolve(s"ours-$kind-$m"), dir.resolve(s"stock-$kind-$m"))
+      Seq(ours, theirs).foreach(p =>
+        if (kind == "dir") Files.createDirectory(p) else Files.createFile(p))
       fs.setPermission(new Path(ours.toUri), perm)
       stock.setPermission(new Path(theirs.toUri), perm)
-      assert(modeOf(ours) == modeOf(theirs), m)
+      assert(unixMode(ours) == unixMode(theirs), s"$kind $m")
     }
   }
 

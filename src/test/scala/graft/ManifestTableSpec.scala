@@ -1022,20 +1022,24 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("rewriteWhere on a FULLY-dead table whose manifest records no schema " +
-    "no-ops: the table keeps its tombstones until new data arrives") {
+    "infers it from the dead files and records it in the empty commit") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-rewrite-alldead-legacy").toString
     ManifestTable.mergePartitioned(
       Seq((1L, "d1", false), (2L, "d2", false)).toDF("id", "day", "live"),
       root, Seq("id", "day"), "day")
     val v1 = ManifestTable.currentVersion(root)
+    def schemaLines(v: Int) = Files.readAllLines(Paths.get(root, s"manifest-v$v.json"))
+      .asScala.filter(_.startsWith("#schema="))
     val m = Paths.get(root, s"manifest-v$v1.json")
     Files.writeString(m, Files.readAllLines(m).asScala
       .filterNot(_.startsWith("#schema=")).mkString("\n"))
-    assert(ManifestTable.rewriteWhere(spark, root, "day", $"live") == v1)
-    assert(ManifestTable.currentVersion(root) == v1)
+    assert(schemaLines(v1).isEmpty)
+    assert(ManifestTable.rewriteWhere(spark, root, "day", $"live") == v1 + 1)
+    assert(schemaLines(v1 + 1).size == 1)
+    assert(ManifestTable.read(spark, root).inputFiles.isEmpty)
     assert(ManifestTable.read(spark, root).columns.toSeq == Seq("id", "day", "live"))
-    assert(ManifestTable.read(spark, root).where($"live").count() == 0L)
+    assert(ManifestTable.read(spark, root).isEmpty)
   }
 
   test("append rejects a stats re-declaration that would MISREAD carried-over " +
